@@ -21,13 +21,12 @@ with file-level bloom indexes. This module is that layer for our format:
   {col: base64(bitset)}}}``; a bloom that saturates past 50% fill is
   dropped (it would admit everything anyway).
 - at read time, equality predicates probe the bloom: the probe positions
-  are computed BY SPARK ITSELF (one single-row job per distinct
-  (value, m, k) per read call), so the probe hash can never diverge from
-  the build hash — there is no Python reimplementation of xxhash64 to
-  drift out of sync. Any bit absent => the file cannot contain the value
-  => skip. Missing/dropped blooms admit the file: like min/max stats,
-  blooms are an optimization, never a correctness input (the real filter
-  always runs over the survivors).
+  come from ``lake/hashing.py``, a pure-Python twin of Spark's
+  ``xxhash64`` that ``tests/test_hashing.py`` pins to Spark bit for bit,
+  so probing runs no Spark job. Any bit absent => the file cannot contain
+  the value => skip. Missing/dropped blooms admit the file: like min/max
+  stats, blooms are an optimization, never a correctness input (the real
+  filter always runs over the survivors).
 
 Soundness notes:
 - only ``=`` predicates probe (a bloom says nothing about ranges), and only
@@ -58,7 +57,8 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+from table2qb_spark.lake.hashing import hash_int, hash_value
 
 PROP_COLUMNS = "bloom.columns"  # comma-separated column names
 PROP_BITS = "bloom.bits"  # m — bloom size in bits (power of two not required)
@@ -169,28 +169,16 @@ def build_file_blooms(
     return out
 
 
-def probe_positions(
-    spark: SparkSession, value: Any, col_type: str, m: int, k: int
-) -> list[int] | None:
-    """Bit positions Spark itself assigns ``value`` of ``col_type`` — one
-    single-row local job, guaranteeing probe == build hashing. Returns None
-    (never prune) when the value cannot be represented in the column type."""
-    try:
-        schema = StructType([StructField("v", _parse_datatype_string(col_type))])
-        row = (
-            spark.createDataFrame([(value,)], schema)
-            .select(
-                *[
-                    F.pmod(F.xxhash64(F.col("v"), F.lit(i)), F.lit(m)).alias(f"p{i}")
-                    for i in range(k)
-                ]
-            )
-            .collect()[0]
-        )
-    except Exception:
+def probe_positions(value: Any, col_type: str, m: int, k: int) -> list[int] | None:
+    """The k bit positions the build assigns ``value`` of ``col_type``:
+    probe ``i`` is ``pmod(xxhash64(value, i), m)``, i.e. the value's hash
+    chained through ``hashInt(i, .)``. Returns None (never prune) for a null
+    value or one Spark would not accept for the column type (a Python type
+    mismatch, an out-of-range integer)."""
+    h = hash_value(value, col_type)
+    if h is None:
         return None
-    pos = [row[f"p{i}"] for i in range(k)]
-    return None if any(p is None for p in pos) else [int(p) for p in pos]
+    return [hash_int(i, h) % m for i in range(k)]
 
 
 def bloom_admits(b64: str, positions: list[int]) -> bool:
@@ -209,11 +197,9 @@ def bloom_admits(b64: str, positions: list[int]) -> bool:
 
 class BloomProber:
     """Per-read() probe cache: one entry per distinct (col-type, value, m, k)
-    so a scan over many manifest entries pays at most a handful of
-    single-row probe jobs."""
+    so a scan over many manifest entries hashes each probed value once."""
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
+    def __init__(self):
         self._cache: dict[tuple, list[int] | None] = {}
 
     def admits(
@@ -241,9 +227,10 @@ class BloomProber:
             ty = written_types.get(col)
             if ty is None or str(ty).lower() not in _ELIGIBLE_TYPES:
                 continue
-            key = (str(ty).lower(), value, m, k)
+            # type(value) keeps True apart from 1 (equal as dict keys)
+            key = (str(ty).lower(), type(value), value, m, k)
             if key not in self._cache:
-                self._cache[key] = probe_positions(self.spark, value, str(ty), m, k)
+                self._cache[key] = probe_positions(value, str(ty), m, k)
             pos = self._cache[key]
             if pos is not None and not bloom_admits(cols[col], pos):
                 return False

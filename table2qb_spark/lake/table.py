@@ -58,6 +58,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from table2qb_spark.lake.hashing import key_bucket
+
 META_DIR = "_meta"
 DATA_DIR = "data"
 COMMITS_DIR = "commits"
@@ -71,7 +73,8 @@ class ConcurrentCommitError(RuntimeError):
 def key_bucket_expr(key_cols: list[str], n_buckets: int) -> Column:
     """The bucket transform. MUST be stable across sessions/versions — it is
     part of the on-disk layout. xxhash64 over the key columns separated by a
-    unit separator, mod n_buckets."""
+    unit separator, mod n_buckets. ``lake/hashing.py::key_bucket`` is its
+    driver-side twin (point lookups); the two must change together."""
     sep = F.lit("\x1f")
     parts: list[Column] = []
     for i, k in enumerate(key_cols):
@@ -1176,13 +1179,13 @@ class LakeTable:
         current = snap.current_schema()
 
         # bloom probing (lake/bloom.py): only when an equality predicate
-        # exists — the prober lazily pays one single-row Spark job per
-        # distinct (type, value, m, k) and caches it across all entries
+        # exists — the prober hashes each distinct (type, value, m, k) once
+        # on the driver and caches it across all entries
         prober = None
         if preds and any(op == "=" for _, op, _ in preds):
             from table2qb_spark.lake.bloom import BloomProber
 
-            prober = BloomProber(self.spark)
+            prober = BloomProber()
 
         # current-name -> written-name map per schema version (renames)
         c2w_cache: dict[str, dict[str, str]] = {}
@@ -1350,15 +1353,20 @@ class LakeTable:
 
         The bucket transform that routed every write
         (``key_bucket_expr`` — part of the on-disk layout) routes the read
-        too: the key's bucket is computed by Spark itself (one single-row
-        job, so Python can never disagree with the layout hash), only that
-        bucket's manifest is opened, and within it manifest min/max stats
-        plus blooms (when ``bloom.columns`` includes the keys) prune to the
-        file(s) that can actually hold the key. At 100 TB this turns a key
-        probe from a full scan into one manifest read + typically one file.
+        too: ``lake/hashing.py::key_bucket`` computes the key's bucket on
+        the driver, with no Spark job, only that bucket's manifest is
+        opened, and within it manifest min/max stats plus blooms (when
+        ``bloom.columns`` includes the keys) prune to the file(s) that can
+        actually hold the key. At 100 TB this turns a key probe from a full
+        scan into one manifest read + typically one file.
 
         All key columns must be present; extra columns become additional
-        equality predicates (stat/bloom-pruned, then filtered)."""
+        equality predicates (stat/bloom-pruned, then filtered). Key values
+        must match the declared key types: ``str`` for string, ``int`` for
+        tinyint/smallint/int/bigint, ``bool`` for boolean,
+        ``datetime.date`` for date, or None. Any other key type (double,
+        decimal, timestamp, ...) or a mismatched value raises
+        ``ValueError``."""
         snap = self.snapshot(snapshot_id)
         missing = [k for k in snap.key_columns if k not in key_values]
         if missing:
@@ -1370,21 +1378,15 @@ class LakeTable:
         unknown = [k for k in key_values if k not in types]
         if unknown:
             raise ValueError(f"lookup on unknown column(s) {unknown}")
-        # the bucket function casts keys to string; feed it strings so the
-        # one-row probe row needs no per-type schema
-        probe = self.spark.createDataFrame(
-            [tuple(str(key_values[k]) for k in snap.key_columns)],
-            StructType.fromDDL(
-                ", ".join(f"`{k}` string" for k in snap.key_columns)
-            ),
+        b = key_bucket(
+            [key_values[k] for k in snap.key_columns],
+            [types[k] for k in snap.key_columns],
+            snap.n_buckets,
         )
-        b = probe.select(
-            key_bucket_expr(snap.key_columns, snap.n_buckets).alias("b")
-        ).collect()[0]["b"]
         preds = [(k, "=", v) for k, v in key_values.items()]
         return self.read(
             snapshot_id=snapshot_id,
-            buckets=[int(b)],
+            buckets=[b],
             where=preds,
             prune_report=prune_report,
         )

@@ -906,16 +906,33 @@ def cmd_cdc_lookup(args) -> int:
               file=sys.stderr)
         return 1
     t = LakeTable(spark, args.table)
+    import datetime
+
     from table2qb_spark.lake.skipping import parse_predicates
 
+    sid = t.resolve_ref(args.snapshot) if args.snapshot else None
+    types = {c["name"]: c["type"].lower() for c in t.snapshot(sid).current_schema()}
     key_values = {}
-    for col, op, v in parse_predicates(args.key):
+    for part in filter(None, (p.strip() for p in args.key.split(","))):
+        [(col, op, v)] = parse_predicates(part)
         if op != "=":
             print(f"error: --key takes equality predicates only ({col}{op}{v})",
                   file=sys.stderr)
             return 1
+        # lookup takes values of the declared key type; the text after
+        # '=' is parsed per that type, not by parse_predicates' guess
+        raw = part.split("=", 1)[1].strip()
+        ty = types.get(col)
+        if ty == "string":
+            v = raw
+        elif ty == "boolean" and raw.lower() in ("true", "false"):
+            v = raw.lower() == "true"
+        elif ty == "date":
+            try:
+                v = datetime.date.fromisoformat(raw)
+            except ValueError:
+                pass
         key_values[col] = v
-    sid = t.resolve_ref(args.snapshot) if args.snapshot else None
     report: dict = {}
     try:
         rows = t.lookup(key_values, snapshot_id=sid, prune_report=report).collect()

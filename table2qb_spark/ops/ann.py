@@ -111,7 +111,12 @@ def ivf_assign(
 
     crows = None
     if nprobe == 1:
-        crows = centroids.select("centroid_id", "cv").collect()
+        # one row past the cap is enough to decide the fold is off
+        crows = (
+            centroids.select("centroid_id", "cv")
+            .limit(_IVF_FOLD_MAX_CENTROIDS + 1)
+            .collect()
+        )
         if len(crows) > _IVF_FOLD_MAX_CENTROIDS:
             crows = None
     if crows is not None:

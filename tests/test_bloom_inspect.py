@@ -199,8 +199,8 @@ class TestLookup:
         assert rows == [] and pr["files_kept"] == 0
 
     def test_lookup_matches_bucket_routing_for_many_keys(self, bloom_table):
-        # the single-row bucket probe must agree with the layout for every
-        # key shape (unicode, separators, empty-ish)
+        # the driver-side bucket twin (lake/hashing.py) must agree with the
+        # layout for every key; tests/test_hashing.py covers key shapes
         for i in (0, 1, 7, 999, 1499):
             rows = bloom_table.lookup(
                 {"repo": f"repo-{i % N_REPOS}", "path": f"src/f{i}.py"}

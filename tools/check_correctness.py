@@ -71,9 +71,15 @@ def main():
                 sys.exit(2)
             corr_path = candidates[-1]
         with open(corr_path) as f:
-            seen = set(_json.load(f))
+            recorded = _json.load(f)
+        # only a green row covers a query: every match flag true, no error
+        seen = {
+            n for n, r in recorded.items()
+            if r.get("rows_match") and r.get("schema_match")
+            and r.get("hash_match") and r.get("err") is None
+        }
         only = {n for n in qs if n not in seen}
-        print(f"# {len(only)} queries missing from {os.path.basename(corr_path)}: "
+        print(f"# {len(only)} queries without a green row in {os.path.basename(corr_path)}: "
               f"{sorted(only)}")
         if not only:
             print("all queries match")
