@@ -29,11 +29,14 @@ event-time watermark is needed: dedup keys on seq, not time (SURVEY.md
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from table2qb_spark.cdc.schema_evolution import reconcile_and_flatten
 from table2qb_spark.lake.merge import merge_upsert
@@ -42,33 +45,54 @@ from table2qb_spark.lake.table import LakeTable
 BOOKKEEPING_COLUMNS = [("_seq", "long"), ("_deleted", "boolean")]
 
 
+def _persist_once(marker: str, make: Callable[[], str]) -> str:
+    """The content of ``marker``, written from ``make()`` when no marker
+    exists yet. Racers each write a private temp file and hard-link it into
+    place: ``os.link`` is a true O_EXCL, so the FIRST writer wins and the
+    marker never changes afterwards (``os.rename`` would let a late racer
+    silently REPLACE it). All racers reread the single persisted value."""
+    if not os.path.exists(marker):
+        text = make()
+        tmp = f"{marker}.tmp.{uuid.uuid4().hex[:12]}"
+        with open(tmp, "w", encoding="utf-8") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, marker)
+        except FileExistsError:
+            pass
+        finally:
+            os.unlink(tmp)
+    with open(marker, encoding="utf-8") as f:
+        return f.read().strip()
+
+
 def checkpoint_app_id(checkpoint_dir: str) -> str:
     """Stable per-checkpoint identity: minted on first use, persisted in the
     checkpoint dir, reread on resume. Namespaces commit ids so two different
     checkpoints (= two different streams / a rebuilt checkpoint) can never
-    collide on batch_id."""
+    collide on batch_id. First writer wins: a late racer's id would orphan
+    commit ids already minted under the first."""
     os.makedirs(checkpoint_dir, exist_ok=True)
-    marker = os.path.join(checkpoint_dir, "table2qb_app_id")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            return f.read().strip()
-    app_id = uuid.uuid4().hex[:12]
-    tmp = f"{marker}.tmp.{app_id}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(app_id)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        # true O_EXCL: the FIRST writer wins and the marker never changes
-        # afterwards (os.rename would let a late racer silently REPLACE the
-        # marker, orphaning commit ids already minted under the first id)
-        os.link(tmp, marker)
-    except FileExistsError:
-        pass
-    finally:
-        os.unlink(tmp)
-    with open(marker) as f:  # all racers reread the single persisted id
-        return f.read().strip()
+    return _persist_once(
+        os.path.join(checkpoint_dir, "table2qb_app_id"), lambda: uuid.uuid4().hex[:12]
+    )
+
+
+def checkpoint_source_schema(
+    spark: SparkSession, checkpoint_dir: str, events_dir: str
+) -> StructType:
+    """The change log's schema as this checkpoint's first start inferred it
+    from the events' parquet footers, persisted as ``StructType`` JSON beside
+    the app id (first writer wins) and reread on every restart, so a restart
+    runs no schema-inference job."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    text = _persist_once(
+        os.path.join(checkpoint_dir, "table2qb_source_schema"),
+        lambda: spark.read.parquet(events_dir).schema.json(),
+    )
+    return StructType.fromJson(json.loads(text))
 
 
 def create_stream_table(
@@ -199,6 +223,10 @@ def start_stream(
     prefilter off when stale events may be the sole carriers of schema
     changes.
 
+    ``schema_ddl``: the change log's schema. Without it the stream uses the
+    schema inferred on this checkpoint's first start
+    (``checkpoint_source_schema``), so a restart reads no parquet footer.
+
     ``max_files_per_trigger``: an int, or ``"auto"`` to size triggers to
     ~4M events (env SPARK_GRAFT_STREAM_TRIGGER_EVENTS) from the backlog's
     parquet footers (see auto_max_files_per_trigger)."""
@@ -210,11 +238,9 @@ def start_stream(
     if max_files_per_trigger == "auto":
         max_files_per_trigger = auto_max_files_per_trigger(spark, events_dir)
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-    if schema_ddl:
-        reader = reader.schema(schema_ddl)
-    else:
-        static = spark.read.parquet(events_dir)
-        reader = reader.schema(static.schema)
+    reader = reader.schema(
+        schema_ddl or checkpoint_source_schema(spark, checkpoint_dir, events_dir)
+    )
     stream = reader.parquet(events_dir)
     if watermark_prefilter:
         from table2qb_spark.cdc.stateful import watermark_filter
@@ -236,7 +262,6 @@ def start_stream(
     app_id = checkpoint_app_id(checkpoint_dir)
 
     def apply_micro_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import json
         import time
 
         commit_id = f"stream-{app_id}-{batch_id:08d}"

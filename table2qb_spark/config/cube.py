@@ -3,9 +3,12 @@
 Reference: src/table2qb/configuration/cube.clj. Resolves observation header
 titles against the columns configuration, detects the cube type
 (measure-dimension vs multi-measure), validates cardinalities (SURVEY.md §2.4
-A4) and, for measure-dimension cubes, runs the **distinct scan** over the
-qb:measureType column (A1 ``resolve-measures``, cube.clj:62-75) — in Spark a
-tiny ``select(mt).distinct()`` job whose partial aggregation happens map-side.
+A4) and, for measure-dimension cubes, resolves the measures the
+qb:measureType column names (A1 ``resolve-measures``, cube.clj:62-75). A
+caller that already knows those measure-type titles passes them in and no
+Spark job runs; otherwise they come from a **distinct scan** over the column
+— in Spark a tiny ``select(mt).distinct()`` job whose partial aggregation
+happens map-side.
 
 All error messages match the reference's strings so the ported error-path
 tests (test/table2qb/configuration/cube_test.clj:64-132) assert unchanged.
@@ -13,6 +16,7 @@ tests (test/table2qb/configuration/cube_test.clj:64-132) assert unchanged.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,28 +126,46 @@ def _validate_no_measure_columns(name_set: set[str], cc: ColumnsConfig) -> None:
         )
 
 
-def _resolve_measures_distinct(
-    obs_df: DataFrame, mt_title: str, cc: ColumnsConfig
+def resolve_measures(
+    measure_titles: Iterable[str],
+    mt_title: str,
+    cc: ColumnsConfig,
+    row_index_of: Callable[[str], int] | None = None,
 ) -> set[str]:
-    """A1: distinct scan over the measure-type column; each distinct raw
-    title must resolve (title->name) to a qb:measure column
-    (cube.clj:62-75). Catalyst runs this as partial+final hash aggregate."""
-    distinct_rows = (
-        obs_df.select(F.col(f"`{mt_title}`").alias("mt")).distinct().collect()
-    )
+    """A1 without data: each measure-type title must resolve (title->name)
+    to a qb:measure column (cube.clj:62-75). ``row_index_of`` maps an
+    offending title to the first row holding it, for the reference's
+    "row N" message; without it the message names no row."""
     measures: set[str] = set()
-    for r in distinct_rows:
-        measure_title = r["mt"]
+    for measure_title in measure_titles:
         name = cc.title_to_name.get(measure_title)
         if name is None or name not in cc.measures:
-            row_index = _first_offending_row_index(obs_df, mt_title, measure_title)
+            row_index = row_index_of(measure_title) if row_index_of else None
+            where = "" if row_index is None else f" row {row_index}"
             raise CubeConfigError(
-                f"Value '{measure_title}' in qb:measureType column '{mt_title}' "
-                f"row {row_index} does not reference a qb:measure column",
+                f"Value '{measure_title}' in qb:measureType column '{mt_title}'"
+                f"{where} does not reference a qb:measure column",
                 {"row_index": row_index, "value": measure_title},
             )
         measures.add(name)
     return measures
+
+
+def _resolve_measures_distinct(
+    obs_df: DataFrame, mt_title: str, cc: ColumnsConfig
+) -> set[str]:
+    """A1 over data: the distinct measure-type titles of ``obs_df``, resolved
+    by ``resolve_measures``. Catalyst runs the scan as partial+final hash
+    aggregate."""
+    distinct_rows = (
+        obs_df.select(F.col(f"`{mt_title}`").alias("mt")).distinct().collect()
+    )
+    return resolve_measures(
+        (r["mt"] for r in distinct_rows),
+        mt_title,
+        cc,
+        row_index_of=lambda value: _first_offending_row_index(obs_df, mt_title, value),
+    )
 
 
 def _first_offending_row_index(obs_df: DataFrame, mt_title: str, value) -> int:
@@ -162,11 +184,18 @@ def get_cube_configuration(
     source: DataFrame | str,
     column_config: ColumnsConfig,
     spark: SparkSession | None = None,
+    measure_titles: Iterable[str] | None = None,
 ) -> CubeConfig:
     """Pass 1 of the cube pipeline (configuration/cube.clj:148-157).
 
     ``source``: observations DataFrame whose column names are the raw input
     titles, or a CSV path (requires ``spark``).
+
+    ``measure_titles``: every value the qb:measureType column can hold, when
+    the caller builds that column itself and so knows them. A
+    measure-dimension cube then resolves its measures from these titles and
+    runs no Spark job; without them it scans the column for its distinct
+    values. Multi-measure cubes have no such column and ignore it.
     """
     if isinstance(source, str):
         assert spark is not None, "spark session required for CSV source"
@@ -214,7 +243,10 @@ def get_cube_configuration(
     # measure-dimension (cube.clj:122-138)
     _validate_no_measure_columns(name_set, column_config)
     value_component = _get_value_component(columns)
-    measures = _resolve_measures_distinct(obs_df, mt_col.title, column_config)
+    if measure_titles is None:
+        measures = _resolve_measures_distinct(obs_df, mt_col.title, column_config)
+    else:
+        measures = resolve_measures(measure_titles, mt_col.title, column_config)
     name_to_component = {c.name: c for c in columns}
     for m in measures:
         name_to_component[m] = column_config.name_to_component[m]

@@ -62,20 +62,18 @@ def _simple_preds(table: LakeTable, where: str):
     """The predicate as the lake's simple-conjunction form
     (``col<op>value``, comma-AND — the same mini-syntax as cdc-export's
     ``--where``) IF it unambiguously is one: every referenced name must be
-    a real column and every value quote/space-free. Anything else — quoted
-    literals, function calls, OR, LIKE — is full Spark SQL (and skips file
-    pruning). Deterministic: a string is interpreted by exactly one
-    grammar."""
+    a real column, every value a value of that column's type and every
+    string value quote/space-free. Anything else — quoted literals,
+    function calls, OR, LIKE — is full Spark SQL (and skips file pruning).
+    Deterministic: a string is interpreted by exactly one grammar."""
     from table2qb_spark.lake.skipping import parse_predicates
 
+    types = {c["name"]: c["type"] for c in table.snapshot().current_schema()}
     try:
-        preds = parse_predicates(where)
+        preds = parse_predicates(where, types)
     except ValueError:
         return None
-    cols = {c["name"] for c in table.snapshot().current_schema()}
-    for col, _op, val in preds:
-        if col not in cols:
-            return None
+    for _col, _op, val in preds:
         if isinstance(val, str) and any(ch in val for ch in "'\" "):
             return None
     return preds

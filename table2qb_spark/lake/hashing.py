@@ -27,7 +27,8 @@ _P3 = 0x165667B19E3779F9
 _P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
 
-_INTEGRAL = {
+# Spark's integral type names (with aliases) -> width in bits
+INTEGRAL_BITS = {
     "tinyint": 8, "byte": 8,
     "smallint": 16, "short": 16,
     "int": 32, "integer": 32,
@@ -118,7 +119,7 @@ def hash_value(value: Any, col_type: str, seed: int = SEED) -> int | None:
             return xxh64(value.encode("utf-8"), seed)
         except UnicodeEncodeError:
             return None
-    bits = _INTEGRAL.get(ty)
+    bits = INTEGRAL_BITS.get(ty)
     if bits is None or type(value) is not int:
         return None
     if not -(1 << (bits - 1)) <= value < (1 << (bits - 1)):
@@ -133,7 +134,7 @@ def _key_string(value: Any, col_type: str) -> str:
     ty = col_type.lower()
     if ty == "string":
         want = str
-    elif ty in _INTEGRAL:
+    elif ty in INTEGRAL_BITS:
         want = int
     elif ty == "boolean":
         want = bool

@@ -31,11 +31,15 @@ predicates a NULL row can never pass.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from table2qb_spark.lake.hashing import INTEGRAL_BITS
 
 # columns with these parquet physical types carry JSON-representable,
 # order-faithful stats; everything else (binary, int96, nested leaves) is
@@ -97,11 +101,39 @@ def file_column_stats(metadata, cols: set[str]) -> dict[str, list]:
     return {k: v for k, v in acc.items() if k not in dead}
 
 
-def parse_predicates(spec: str) -> list[tuple[str, str, Any]]:
+def _parse_value(text: str, col_type: str) -> Any:
+    """``text`` as a literal of the declared ``col_type``, so it compares
+    with the column as a value of the column's own type. Raises
+    ``ValueError`` when ``text`` is no such value or the type takes no
+    literal."""
+    ty = col_type.lower()
+    try:
+        if ty == "string":
+            return text
+        if ty in INTEGRAL_BITS:
+            return int(text)
+        if ty in ("float", "double", "real"):
+            return float(text)
+        if ty.startswith("decimal"):
+            return decimal.Decimal(text)
+        if ty == "boolean" and text.lower() in ("true", "false"):
+            return text.lower() == "true"
+        if ty == "date":
+            return datetime.date.fromisoformat(text)
+        if ty == "timestamp":
+            return datetime.datetime.fromisoformat(text)
+    except (ValueError, decimal.InvalidOperation):
+        pass
+    raise ValueError(f"cannot read {text!r} as a {col_type} value")
+
+
+def parse_predicates(spec: str, types: dict[str, str]) -> list[tuple[str, str, Any]]:
     """Parse a CLI ``--where`` spec: comma-separated ``col<op>value`` with
-    op in =, <, <=, >, >=. Values parse as int, then float, then stay
-    strings. ``repo=alpha,seq>=900`` -> [("repo","=","alpha"),
-    ("seq",">=",900)]."""
+    op in =, <, <=, >, >=. ``types`` maps each column to its declared type
+    (``{"repo": "string", "seq": "bigint"}``); each value is parsed as that
+    type (``_parse_value``), so ``repo=alpha,seq>=900`` ->
+    [("repo","=","alpha"), ("seq",">=",900)]. A column missing from
+    ``types`` or a value its type cannot read raises ``ValueError``."""
     preds: list[tuple[str, str, Any]] = []
     for raw in spec.split(","):
         part = raw.strip()
@@ -111,13 +143,12 @@ def parse_predicates(spec: str) -> list[tuple[str, str, Any]]:
             i = part.find(op)
             if i > 0:
                 col, val = part[:i].strip(), part[i + len(op):].strip()
-                for cast in (int, float):
-                    try:
-                        val = cast(val)
-                        break
-                    except ValueError:
-                        continue
-                preds.append((col, op, val))
+                if col not in types:
+                    raise ValueError(f"predicate {part!r} names unknown column {col!r}")
+                try:
+                    preds.append((col, op, _parse_value(val, types[col])))
+                except ValueError as e:
+                    raise ValueError(f"predicate {part!r}: {e}") from None
                 break
         else:
             raise ValueError(

@@ -1158,8 +1158,9 @@ class LakeTable:
         are filled with nulls. Bucket pruning: pass ``buckets`` to read only
         those directories (the MERGE fast path).
 
-        ``where`` — simple predicate conjunction (``"seq>=900,repo=alpha"``
-        or ``[("seq", ">=", 900)]``): files whose manifest min/max ranges
+        ``where`` — simple predicate conjunction (``"seq>=900,repo=alpha"``,
+        each value read as its column's declared type, or
+        ``[("seq", ">=", 900)]``): files whose manifest min/max ranges
         cannot satisfy it are skipped at PLAN time (never listed, opened or
         footer-read by Spark), then the same predicates run as a real
         filter over the survivors — identical results to a full filtered
@@ -1172,11 +1173,12 @@ class LakeTable:
             stats_admit,
         )
 
-        preds = parse_predicates(where) if isinstance(where, str) else (
-            list(where) if where else None
-        )
         snap = self.snapshot(snapshot_id)
         current = snap.current_schema()
+        if isinstance(where, str):
+            preds = parse_predicates(where, {c["name"]: c["type"] for c in current})
+        else:
+            preds = list(where) if where else None
 
         # bloom probing (lake/bloom.py): only when an equality predicate
         # exists — the prober hashes each distinct (type, value, m, k) once

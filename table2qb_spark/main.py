@@ -906,35 +906,17 @@ def cmd_cdc_lookup(args) -> int:
               file=sys.stderr)
         return 1
     t = LakeTable(spark, args.table)
-    import datetime
-
     from table2qb_spark.lake.skipping import parse_predicates
 
     sid = t.resolve_ref(args.snapshot) if args.snapshot else None
-    types = {c["name"]: c["type"].lower() for c in t.snapshot(sid).current_schema()}
-    key_values = {}
-    for part in filter(None, (p.strip() for p in args.key.split(","))):
-        [(col, op, v)] = parse_predicates(part)
-        if op != "=":
-            print(f"error: --key takes equality predicates only ({col}{op}{v})",
-                  file=sys.stderr)
-            return 1
-        # lookup takes values of the declared key type; the text after
-        # '=' is parsed per that type, not by parse_predicates' guess
-        raw = part.split("=", 1)[1].strip()
-        ty = types.get(col)
-        if ty == "string":
-            v = raw
-        elif ty == "boolean" and raw.lower() in ("true", "false"):
-            v = raw.lower() == "true"
-        elif ty == "date":
-            try:
-                v = datetime.date.fromisoformat(raw)
-            except ValueError:
-                pass
-        key_values[col] = v
+    types = {c["name"]: c["type"] for c in t.snapshot(sid).current_schema()}
     report: dict = {}
     try:
+        key_values = {}
+        for col, op, v in parse_predicates(args.key, types):
+            if op != "=":
+                raise ValueError(f"--key takes equality predicates only ({col}{op}{v})")
+            key_values[col] = v
         rows = t.lookup(key_values, snapshot_id=sid, prune_report=report).collect()
     except ValueError as e:
         print(f"error: {e}", file=sys.stderr)
@@ -1491,10 +1473,14 @@ def cmd_cdc_export(args) -> int:
         [int(b) for b in args.buckets.split(",")] if args.buckets else None
     )
     prune: dict = {}
-    df = table.read(
-        snapshot_id=args.snapshot, buckets=buckets,
-        where=args.where, prune_report=prune if args.where else None,
-    )
+    try:
+        df = table.read(
+            snapshot_id=args.snapshot, buckets=buckets,
+            where=args.where, prune_report=prune if args.where else None,
+        )
+    except ValueError as e:  # a --where naming no column or mistyped
+        print(f"error: {e}", file=sys.stderr)
+        return 1
     if args.columns:
         df = df.select(*[c.strip() for c in args.columns.split(",")])
     if args.shards:

@@ -14,8 +14,6 @@ stage; no shuffle anywhere.
 
 from __future__ import annotations
 
-import csv as _csv
-import io
 import json
 import os
 
@@ -165,14 +163,6 @@ def get_uris(base_uri: str, codelist_slug: str) -> dict:
     return resolve_uris(CODELIST_PIPELINE_URIS, base_uri, codelist_slug)
 
 
-def _write_csv_local(path: str, columns: list[str], rows: list[dict]) -> None:
-    with open(path, "w", encoding="utf-8", newline="") as f:
-        w = _csv.writer(f)
-        w.writerow(columns)
-        for r in rows:
-            w.writerow([r.get(c) if r.get(c) is not None else "" for c in columns])
-
-
 def codelist_pipeline(
     spark: SparkSession,
     output_directory: str,
@@ -201,20 +191,15 @@ def codelist_pipeline(
     # path stays ONE driver-written file — but past the threshold the rows
     # never touch the driver; executors write header-ed part files that any
     # CSVW consumer (and spark.read.csv) reads as a unit.
-    from table2qb_spark.pipelines.cube import CSV_DRIVER_SINK_MAX_BYTES
+    from table2qb_spark.pipelines import cube as cube_pipe
 
-    if os.path.getsize(codelist_csv) > CSV_DRIVER_SINK_MAX_BYTES:
+    if os.path.getsize(codelist_csv) > cube_pipe.CSV_DRIVER_SINK_MAX_BYTES:
         out_dir = output_csv + ".d"
-        (
-            df.select(*OUTPUT_COLUMNS)
-            .write.mode("overwrite")
-            .option("header", True)
-            .csv(out_dir)
-        )
+        cube_pipe.write_csv_parts(df.select(*OUTPUT_COLUMNS), out_dir)
         output_csv = out_dir
     else:
         rows = [r.asDict() for r in df.collect()]
-        _write_csv_local(output_csv, OUTPUT_COLUMNS, rows)
+        cube_pipe.write_csv_file(output_csv, OUTPUT_COLUMNS, rows)
 
     metadata = codelist_schema(output_csv, codelist_name, uris)
     with open(metadata_file, "w", encoding="utf-8") as f:

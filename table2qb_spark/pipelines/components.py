@@ -13,7 +13,6 @@ Spark shape: one generated ``select()`` — zero shuffles.
 
 from __future__ import annotations
 
-import csv as _csv
 import json
 import os
 
@@ -197,26 +196,15 @@ def components_pipeline(
     # golden path stays ONE driver-written file — but past the threshold
     # the rows never touch the driver; executors write header-ed part files
     # that any CSVW consumer (and spark.read.csv) reads as a unit.
-    from table2qb_spark.pipelines.cube import CSV_DRIVER_SINK_MAX_BYTES
+    from table2qb_spark.pipelines import cube as cube_pipe
 
-    if os.path.getsize(input_csv) > CSV_DRIVER_SINK_MAX_BYTES:
+    if os.path.getsize(input_csv) > cube_pipe.CSV_DRIVER_SINK_MAX_BYTES:
         out_dir = components_csv + ".d"
-        (
-            df.select(*OUTPUT_COLUMNS)
-            .write.mode("overwrite")
-            .option("header", True)
-            .csv(out_dir)
-        )
+        cube_pipe.write_csv_parts(df.select(*OUTPUT_COLUMNS), out_dir)
         components_csv = out_dir
     else:
         rows = [r.asDict() for r in df.collect()]
-        with open(components_csv, "w", encoding="utf-8", newline="") as f:
-            w = _csv.writer(f)
-            w.writerow(OUTPUT_COLUMNS)
-            for r in rows:
-                w.writerow(
-                    [r.get(c) if r.get(c) is not None else "" for c in OUTPUT_COLUMNS]
-                )
+        cube_pipe.write_csv_file(components_csv, OUTPUT_COLUMNS, rows)
 
     metadata = components_schema(components_csv, uris)
     with open(metadata_file, "w", encoding="utf-8") as f:

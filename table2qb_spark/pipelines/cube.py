@@ -3,8 +3,10 @@
 Reference: src/table2qb/pipelines/cube.clj + configuration/cube.clj. Two-pass
 shape preserved Spark-first (SURVEY.md §3.3):
 
-- **Pass 1**: cube-config inference (config/cube.py) — a tiny
-  ``distinct()`` job over the qb:measureType column + driver validations.
+- **Pass 1**: cube-config inference (config/cube.py) — driver validations,
+  plus, for a CSV input, a tiny ``distinct()`` job over the qb:measureType
+  column to learn its measures (a source that knows its measure-type
+  titles, like the lake cube, passes them and skips the job).
 - **Pass 2**: ONE generated ``select()`` applying the per-column
   value_transformations (D7: slugize/unitize as Catalyst expressions) and the
   dimension-completeness guards (P11) — fully fused, zero shuffles.
@@ -397,6 +399,32 @@ def get_uris(base_uri: str, dataset_slug: str) -> dict:
 CSV_DRIVER_SINK_MAX_BYTES = 64 * 1024 * 1024
 
 
+def write_csv_file(path: str, columns: list[str], rows: list[dict]) -> None:
+    """The driver CSV sink: one RFC 4180 file (Python's ``csv`` dialect),
+    a null written as an empty field."""
+    with open(path, "w", encoding="utf-8", newline="") as f:
+        w = _csv.writer(f)
+        w.writerow(columns)
+        for r in rows:
+            w.writerow([r.get(c) if r.get(c) is not None else "" for c in columns])
+
+
+def write_csv_parts(df: DataFrame, out_dir: str) -> None:
+    """The distributed CSV sink: header-ed part files under ``out_dir``,
+    written as RFC 4180 like ``write_csv_file``. Spark's defaults differ:
+    they escape quotes with a backslash, write an empty string as ``""``
+    and trim leading and trailing whitespace."""
+    (
+        df.write.mode("overwrite")
+        .option("header", True)
+        .option("escape", '"')
+        .option("emptyValue", "")
+        .option("ignoreLeadingWhiteSpace", False)
+        .option("ignoreTrailingWhiteSpace", False)
+        .csv(out_dir)
+    )
+
+
 def cube_pipeline(
     spark: SparkSession,
     output_directory: str,
@@ -429,12 +457,9 @@ def cube_pipeline(
     metadata_file = os.path.join(output_directory, "metadata.json")
 
     # component specifications (driver-side: derived from broadcast config)
-    comp_recs = component_specification_records(cube_config)
-    with open(comp_spec_csv, "w", encoding="utf-8", newline="") as f:
-        w = _csv.writer(f)
-        w.writerow(COMPONENT_SPEC_COLUMNS)
-        for r in comp_recs:
-            w.writerow([r.get(c) or "" for c in COMPONENT_SPEC_COLUMNS])
+    write_csv_file(
+        comp_spec_csv, COMPONENT_SPEC_COLUMNS, component_specification_records(cube_config)
+    )
 
     # observations: distributed transform, then the CSV sink. The golden
     # artifact path (small inputs) is ONE driver-written file; past the size
@@ -448,7 +473,7 @@ def cube_pipeline(
         distributed_csv = os.path.getsize(input_csv) > CSV_DRIVER_SINK_MAX_BYTES
     if distributed_csv:
         obs_dir = observations_csv + ".d"
-        obs.write.mode("overwrite").option("header", True).csv(obs_dir)
+        write_csv_parts(obs, obs_dir)
         observations_csv = obs_dir
     else:
         pdf = obs.toPandas()

@@ -15,6 +15,13 @@ join the reference only achieved by URI convention (SURVEY.md §2.5 J3).
 Everything is generated Catalyst expressions over the lake read — the same
 transform library the CSV pipelines use, demonstrating that the cube layer
 is source-agnostic.
+
+The Measure Type column holds only the literals ``LAKE_MEASURE_TYPES`` that
+``lake_observations_raw`` writes into it, so ``build_lake_cube`` hands those
+titles to the cube configuration instead of scanning the lake to learn them:
+building the cube launches no Spark job, only the caller's action does. The
+cube therefore always declares both measures, even over a lake with no live
+rows.
 """
 
 from __future__ import annotations
@@ -45,18 +52,21 @@ LAKE_CUBE_COLUMNS = [
                      "http://ex.org/def/measure/{measure_type}", None, "number", None),
 ]
 LAKE_CUBE_CONFIG = ColumnsConfig(LAKE_CUBE_COLUMNS)
+# every value of the Measure Type column: per file, then per (repo, lang)
+LAKE_MEASURE_TYPES = ("Content Length", "File Count")
 
 
 def lake_observations_raw(table: LakeTable) -> DataFrame:
     """Raw title-named observation rows derived from the lake: one
     Content-Length observation per file, one File-Count per (repo, lang)."""
+    content_length, file_count = LAKE_MEASURE_TYPES
     live = table.read_live() if "_deleted" in [
         c["name"] for c in table.snapshot().current_schema()
     ] else table.read()
     per_file = live.select(
         F.col("repo").alias("Repo"),
         F.col("lang").alias("Language"),
-        F.lit("Content Length").alias("Measure Type"),
+        F.lit(content_length).alias("Measure Type"),
         F.length("content").cast("string").alias("Value"),
     )
     per_group = (
@@ -65,7 +75,7 @@ def lake_observations_raw(table: LakeTable) -> DataFrame:
         .select(
             F.col("repo").alias("Repo"),
             F.col("lang").alias("Language"),
-            F.lit("File Count").alias("Measure Type"),
+            F.lit(file_count).alias("Measure Type"),
             F.col("n").cast("string").alias("Value"),
         )
     )
@@ -77,10 +87,11 @@ def build_lake_cube(
     table: LakeTable,
     language_codelist: DataFrame | None = None,
 ) -> dict:
-    """Run the cube transform over the lake; returns observation DataFrame,
-    used-codes, component specs, and the codelist-resolution report."""
+    """Plan the cube transform over the lake; returns observation DataFrame,
+    used-codes, component specs, and the codelist-resolution report. Runs
+    no Spark job: the measures come from ``LAKE_MEASURE_TYPES``."""
     raw = lake_observations_raw(table)
-    cfg = get_cube_configuration(raw, LAKE_CUBE_CONFIG)
+    cfg = get_cube_configuration(raw, LAKE_CUBE_CONFIG, measure_titles=LAKE_MEASURE_TYPES)
     obs = cube_pipe.observation_records_df(raw, cfg)
     obs = obs.withColumn(
         "obs_uri", cube_pipe.observation_uri_expr("http://ex.org/data/", "repo-stats", cfg)

@@ -1,5 +1,7 @@
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -42,3 +44,15 @@ def default_config():
     if not os.path.exists(path):
         pytest.skip("reference columns.csv not available")
     return load_column_configuration(path)
+
+
+@contextmanager
+def job_group(spark):
+    """Yields a callable listing the Spark jobs launched inside the block."""
+    sc = spark.sparkContext
+    group = f"no-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs launched inside this block")
+    try:
+        yield lambda: sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

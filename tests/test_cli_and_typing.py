@@ -142,6 +142,13 @@ def test_cli_datagen_and_replay(tmp_path):
     ).stdout
     e_none = json.loads(out.strip().splitlines()[-1])
     assert e_none["rows"] == 0 and e_none["files_pruned"] == e_none["files_total"] > 0
+    # a --where naming no column is an error message, not a traceback
+    bad3 = subprocess.run(
+        [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
+         "--table", table, "--out", str(tmp_path / "z"), "--where", "nope>=1"],
+        capture_output=True, text=True, cwd="/root/repo", env=env,
+    )
+    assert bad3.returncode == 1 and "unknown column 'nope'" in bad3.stderr
 
     # --format jsonl: one JSON object per line, every live row exported
     exp_jl = str(tmp_path / "export_jsonl")

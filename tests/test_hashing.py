@@ -6,8 +6,6 @@ may launch a Spark job."""
 
 import datetime
 import random
-import uuid
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +14,7 @@ from pyspark.sql.types import StructType
 from table2qb_spark.lake.bloom import BloomProber, probe_positions
 from table2qb_spark.lake.hashing import hash_int, hash_value, key_bucket, xxh64
 from table2qb_spark.lake.table import LakeTable, key_bucket_expr
+from tests.conftest import job_group
 
 N_BUCKETS = 17
 _ALPHABET = (
@@ -178,17 +177,6 @@ class TestLookupKeyTypes:
             t.lookup({"x": 1e19})
 
 
-@contextmanager
-def _job_group(spark):
-    sc = spark.sparkContext
-    group = f"no-job-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "jobs launched inside this block")
-    try:
-        yield lambda: sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def test_lookup_planning_and_bloom_probing_run_no_spark_job(spark, tmp_path):
     rows = [(i, f"p{i}") for i in range(40)]
     t = _write(
@@ -197,7 +185,7 @@ def test_lookup_planning_and_bloom_probing_run_no_spark_job(spark, tmp_path):
     )
     entries = [e for b in t.snapshot().files for e in t.snapshot().files[b]]
     assert any(e.get("bloom") for e in entries)
-    with _job_group(spark) as jobs:
+    with job_group(spark) as jobs:
         df = t.lookup({"id": 7, "payload": "p7"})
         prober = BloomProber()
         for e in entries:

@@ -1,14 +1,26 @@
 """End-to-end CDC -> cube composition, plus physical-plan audits
 (pushdown / broadcast / codegen — the 100TB sanity checks)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.apply import ChangeLogReplayer
+from table2qb_spark.config.cube import get_cube_configuration, resolve_measures
 from table2qb_spark.datagen import changelog as gen
+from table2qb_spark.errors import CubeConfigError
+from table2qb_spark.lake.dml import delete_where
 from table2qb_spark.lake.table import LakeTable
 from table2qb_spark.pipelines import codelist as codelist_pipe
-from table2qb_spark.pipelines.lake_cube import build_lake_cube
+from table2qb_spark.pipelines.lake_cube import (
+    LAKE_CUBE_CONFIG,
+    LAKE_MEASURE_TYPES,
+    build_lake_cube,
+)
+from tests.conftest import job_group
+
+FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
 BASE_SCHEMA = [
     ("repo", "string"),
@@ -63,6 +75,61 @@ class TestLakeCube:
         slugs = [c["component_slug"] for c in res["component_specifications"]]
         assert slugs == sorted(slugs)
         assert "measure_type" in slugs and "content_length" in slugs
+
+
+class TestLakeCubeMeasures:
+    """The lake cube takes its measures from ``LAKE_MEASURE_TYPES``, not
+    from a scan of the lake."""
+
+    def test_build_runs_no_spark_job(self, spark, lake):
+        langs = spark.createDataFrame([(lang,) for lang in gen.LANGS], ["Label"])
+        codelist = codelist_pipe.code_records_df(spark, langs)
+        with job_group(spark) as jobs:
+            res = build_lake_cube(spark, lake, language_codelist=codelist)
+            assert jobs() == []
+            # the detector itself sees a job started in the group
+            res["observations"].write.format("noop").mode("overwrite").save()
+            assert jobs() != []
+
+    def test_both_measures_declared_even_when_every_row_is_deleted(
+        self, spark, lake, tmp_path
+    ):
+        assert build_lake_cube(spark, lake)["cube_config"].measures == {
+            "content_length", "file_count"
+        }
+        ev = gen.gen_change_log(spark, 200, 4, 10, seed=5, schema_evolution_after=None)
+        path = str(tmp_path / "events")
+        gen.write_change_log(ev, path, n_files=1)
+        t = LakeTable.create(spark, str(tmp_path / "lake"), BASE_SCHEMA, ["repo", "path"], n_buckets=2)
+        ChangeLogReplayer(spark, t, path, batch_events=200).run()
+        delete_where(t, "repo IS NOT NULL", commit_id="wipe")
+        assert t.read().count() == 0
+        res = build_lake_cube(spark, t)
+        assert res["cube_config"].measures == {"content_length", "file_count"}
+        assert res["observations"].count() == 0
+
+    def test_titles_resolve_without_data(self):
+        assert resolve_measures(LAKE_MEASURE_TYPES, "Measure Type", LAKE_CUBE_CONFIG) == {
+            "content_length", "file_count"
+        }
+        with pytest.raises(
+            CubeConfigError,
+            match="^Value 'Line Count' in qb:measureType column 'Measure Type' "
+            "does not reference a qb:measure column$",
+        ):
+            resolve_measures(["Line Count"], "Measure Type", LAKE_CUBE_CONFIG)
+
+    def test_csv_scan_names_the_row_of_an_unknown_measure_type(self, spark):
+        with pytest.raises(CubeConfigError) as err:
+            get_cube_configuration(
+                os.path.join(FIXTURES, "lake-cube-unknown-measure-type.csv"),
+                LAKE_CUBE_CONFIG,
+                spark=spark,
+            )
+        assert str(err.value) == (
+            "Value 'Line Count' in qb:measureType column 'Measure Type' row 2 "
+            "does not reference a qb:measure column"
+        )
 
 
 class TestPhysicalPlans:

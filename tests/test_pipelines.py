@@ -374,6 +374,35 @@ class TestDistributedObservationsSink:
         assert os.path.isfile(res["observations_csv"])
 
 
+class TestCsvSinksAgree:
+    """The driver sink and the distributed sink write the same RFC 4180:
+    Python's csv module reads the same field values from both."""
+
+    def test_quotes_commas_newlines_spaces_and_empty(self, spark, tmp_path):
+        cols = ["k", "v"]
+        values = ['say "hi"', "a,b", "line1\nline2", "  padded  ", "", None, 'mix, "q"\n ']
+        rows = [{"k": str(i), "v": v} for i, v in enumerate(values)]
+        want = [[r["k"], r["v"] if r["v"] is not None else ""] for r in rows]
+
+        driver_csv = str(tmp_path / "driver.csv")
+        cube.write_csv_file(driver_csv, cols, rows)
+        with open(driver_csv, newline="", encoding="utf-8") as f:
+            header, *got = list(_csv.reader(f))
+        assert header == cols and got == want
+
+        parts_dir = str(tmp_path / "parts")
+        df = spark.createDataFrame([(r["k"], r["v"]) for r in rows], "k string, v string")
+        cube.write_csv_parts(df, parts_dir)
+        got = []
+        for name in sorted(os.listdir(parts_dir)):
+            if name.startswith("part-"):
+                with open(os.path.join(parts_dir, name), newline="", encoding="utf-8") as f:
+                    header, *part = list(_csv.reader(f))
+                assert header == cols
+                got += part
+        assert sorted(got) == sorted(want)
+
+
 class TestDistributedCodelistComponentsSinks:
     """codelist/components CSV sinks flip to executor part files past the
     driver-sink size threshold (round-5 verdict hardening #2): codelists

@@ -2,6 +2,9 @@
 predicate parsing/admission (pure functions — no Spark), and the
 LakeTable read-path integration (pruned file set + identical results)."""
 
+import datetime
+import decimal
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -14,21 +17,42 @@ from table2qb_spark.lake.skipping import (
 )
 
 
+TYPES = {"repo": "string", "seq": "bigint", "score": "double", "a": "int"}
+
+
 class TestParse:
     def test_ops_and_types(self):
-        assert parse_predicates("repo=alpha,seq>=900,score<0.5") == [
+        assert parse_predicates("repo=alpha,seq>=900,score<0.5", TYPES) == [
             ("repo", "=", "alpha"),
             ("seq", ">=", 900),
             ("score", "<", 0.5),
         ]
 
+    def test_values_take_the_declared_type_not_a_guess(self):
+        assert parse_predicates("repo=7,score=2", TYPES) == [
+            ("repo", "=", "7"),
+            ("score", "=", 2.0),
+        ]
+        assert parse_predicates(
+            "d=2024-02-29,ok=TRUE,amt=1.10",
+            {"d": "date", "ok": "boolean", "amt": "decimal(10,2)"},
+        ) == [
+            ("d", "=", datetime.date(2024, 2, 29)),
+            ("ok", "=", True),
+            ("amt", "=", decimal.Decimal("1.10")),
+        ]
+
     def test_two_char_ops_win(self):
-        assert parse_predicates("a<=3") == [("a", "<=", 3)]
-        assert parse_predicates("a>=3") == [("a", ">=", 3)]
+        assert parse_predicates("a<=3", TYPES) == [("a", "<=", 3)]
+        assert parse_predicates("a>=3", TYPES) == [("a", ">=", 3)]
 
     def test_bad_spec(self):
         with pytest.raises(ValueError):
-            parse_predicates("nonsense")
+            parse_predicates("nonsense", TYPES)
+        with pytest.raises(ValueError, match="unknown column 'nope'"):
+            parse_predicates("nope=1", TYPES)
+        with pytest.raises(ValueError, match="cannot read 'x1' as a bigint"):
+            parse_predicates("seq>=x1", TYPES)
 
 
 class TestAdmit:
@@ -210,3 +234,33 @@ class TestLakeReadSkipping:
         assert "p400" not in paths          # tombstoned
         assert "p0" in paths and "p404" in paths
         assert "_seq" not in live.columns
+
+
+class TestWhereValuesTakeTheColumnType:
+    """A ``where`` value is typed by its column's declared type, never
+    guessed: ``tag=7`` on a string column compares with the string "7"."""
+
+    def _table(self, spark, path, properties=None):
+        from pyspark.sql.types import StructType
+
+        from table2qb_spark.lake.table import LakeTable, key_bucket_expr
+
+        schema = [("id", "bigint"), ("tag", "string")]
+        t = LakeTable.create(spark, str(path), schema, ["id"], n_buckets=2, properties=properties)
+        rows = [(1, "007"), (2, "7"), (3, "x1"), (4, "12")]
+        df = spark.createDataFrame(
+            rows, StructType.fromDDL(", ".join(f"{n} {ty}" for n, ty in schema))
+        ).withColumn("__bucket", key_bucket_expr(["id"], 2))
+        files = t.write_data_files(df, "s1")
+        t.commit_files("c1", list(files), files)
+        return t
+
+    def test_same_rows_with_and_without_a_bloom(self, spark, tmp_path):
+        plain = self._table(spark, tmp_path / "plain")
+        bloomed = self._table(
+            spark, tmp_path / "bloom", {"bloom.columns": "tag", "bloom.bits": 1024}
+        )
+        for where, want in [("tag=007", [1]), ("tag=7", [2]), ("tag=x1", [3]), ("tag>=7", [2, 3])]:
+            for t in (plain, bloomed):
+                got = sorted(r["id"] for r in t.read(where=where).collect())
+                assert got == want, (where, t.path)

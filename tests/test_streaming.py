@@ -1,6 +1,7 @@
 """Structured Streaming ingest: arrival-order-independent convergence via
 seq-guarded merge + tombstones, exactly-once across stream restarts."""
 
+import json
 import os
 
 import pytest
@@ -70,6 +71,32 @@ def test_streaming_restart_is_exactly_once(spark, tmp_path, stream_events):
     run_stream_to_completion(spark, t, stream_events, ckpt, max_files_per_trigger=5)
     assert table_sha256(t.read_live(), COLS) == sha1
     assert t.current_snapshot_id() == n_snapshots
+
+
+def test_restart_reuses_the_persisted_source_schema(spark, tmp_path, stream_events, monkeypatch):
+    """The first start infers the change log's schema and persists it in the
+    checkpoint; a restart reads it back instead of the events' footers."""
+    from pyspark.sql.readwriter import DataFrameReader
+    from pyspark.sql.types import StructType
+
+    parquet_paths = []
+    real_parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **options):
+        parquet_paths.extend(paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    t = create_stream_table(spark, str(tmp_path / "lake"), BASE_SCHEMA, KEYS, n_buckets=4)
+    ckpt = str(tmp_path / "ckpt")
+    run_stream_to_completion(spark, t, stream_events, ckpt, max_files_per_trigger=10)
+    assert stream_events in parquet_paths
+    with open(os.path.join(ckpt, "table2qb_source_schema")) as f:
+        persisted = StructType.fromJson(json.load(f))
+    assert persisted == spark.read.parquet(stream_events).schema
+    parquet_paths.clear()
+    run_stream_to_completion(spark, t, stream_events, ckpt, max_files_per_trigger=10)
+    assert stream_events not in parquet_paths
 
 
 def test_new_checkpoint_does_not_collide_with_old_commits(spark, tmp_path, stream_events):
