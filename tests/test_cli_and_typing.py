@@ -13,11 +13,13 @@ from table2qb_spark.config.typing import typed_view
 from table2qb_spark.pipelines.cube import observation_records_df
 from tests.conftest import example_csv
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_cli_list():
     out = subprocess.run(
         [sys.executable, "-m", "table2qb_spark.main", "list"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO, check=True,
     ).stdout
     assert "cube-pipeline" in out and "codelist-pipeline" in out
 
@@ -32,24 +34,24 @@ def test_cli_datagen_and_replay(tmp_path):
         [sys.executable, "-m", "table2qb_spark.main", "datagen",
          "--out", events, "--events-n", "2000", "--repos", "10",
          "--paths-per-repo", "30", "--files", "4"],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     )
     subprocess.run(
         [sys.executable, "-m", "table2qb_spark.main", "cdc-init",
          "--table", table, "--buckets", "4"],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     )
     out = subprocess.run(
         [sys.executable, "-m", "table2qb_spark.main", "cdc-replay",
          "--table", table, "--events", events, "--batch-events", "1000"],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     res = json.loads(out.strip().splitlines()[-1])
     assert res["batches_applied"] == 2 and res["rows"] > 0
 
     status = subprocess.run(
         [sys.executable, "-m", "table2qb_spark.main", "cdc-status", "--table", table],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     s = json.loads(status)
     assert s["summary"]["last_batch"] == 1
@@ -63,7 +65,7 @@ def test_cli_datagen_and_replay(tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", exp],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     e = json.loads(out.strip().splitlines()[-1])
     assert e["rows"] == res["rows"] and e["snapshot"] == res["snapshot"]
@@ -73,7 +75,7 @@ def test_cli_datagen_and_replay(tmp_path):
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", exp_old, "--snapshot", "2",
          "--columns", "repo,path"],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     e_old = json.loads(out.strip().splitlines()[-1])
     assert e_old["snapshot"] == 2 and 0 < e_old["rows"] <= e["rows"]
@@ -92,7 +94,7 @@ def test_cli_datagen_and_replay(tmp_path):
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", exp_sh, "--shards", "4",
          "--shard-key", "path"],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     e_sh = json.loads(out.strip().splitlines()[-1])
     assert e_sh["rows"] == e["rows"] and e_sh["shards"] == 4
@@ -105,7 +107,7 @@ def test_cli_datagen_and_replay(tmp_path):
     bad = subprocess.run(
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", str(tmp_path / "x"), "--shards", "4"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO, env=env,
     )
     assert bad.returncode == 1 and "--shard-key" in bad.stderr
 
@@ -118,7 +120,7 @@ def test_cli_datagen_and_replay(tmp_path):
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", str(tmp_path / "export_asof"),
          "--as-of", str(ts2)],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     e_asof = json.loads(out.strip().splitlines()[-1])
     assert e_asof["snapshot"] == 2 and e_asof["rows"] == e_old["rows"]
@@ -128,7 +130,7 @@ def test_cli_datagen_and_replay(tmp_path):
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", str(tmp_path / "y"),
          "--as-of", str(ts2), "--snapshot", "2"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO, env=env,
     )
     assert bad2.returncode == 1 and "mutually exclusive" in bad2.stderr
 
@@ -138,7 +140,7 @@ def test_cli_datagen_and_replay(tmp_path):
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", str(tmp_path / "export_none"),
          "--where", "repo=zzz-no-such-repo"],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     e_none = json.loads(out.strip().splitlines()[-1])
     assert e_none["rows"] == 0 and e_none["files_pruned"] == e_none["files_total"] > 0
@@ -146,7 +148,7 @@ def test_cli_datagen_and_replay(tmp_path):
     bad3 = subprocess.run(
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", str(tmp_path / "z"), "--where", "nope>=1"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO, env=env,
     )
     assert bad3.returncode == 1 and "unknown column 'nope'" in bad3.stderr
 
@@ -156,7 +158,7 @@ def test_cli_datagen_and_replay(tmp_path):
         [sys.executable, "-m", "table2qb_spark.main", "cdc-export",
          "--table", table, "--out", exp_jl, "--format", "jsonl",
          "--columns", "repo,path"],
-        capture_output=True, text=True, cwd="/root/repo", check=True, env=env,
+        capture_output=True, text=True, cwd=REPO, check=True, env=env,
     ).stdout
     e_jl = json.loads(out.strip().splitlines()[-1])
     assert e_jl["format"] == "jsonl" and e_jl["rows"] is None
