@@ -17,8 +17,10 @@ is total). Each range becomes one MERGE commit with:
 
 Batch-loop vs Structured Streaming: the loop IS ``foreachBatch`` semantics
 with deterministic batch boundaries (seq ranges instead of arrival time),
-which is what makes replay reproducible. A readStream front-end wrapping the
-same ``apply_batch`` lives in table2qb_spark.cdc.streaming.
+which is what makes replay reproducible. Both front-ends — this replayer and
+the readStream one in table2qb_spark.cdc.streaming — hand each batch to the
+same ``apply_change_batch``, which owns everything from the commit-marker
+skip to the metrics row.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.schema_evolution import reconcile_and_flatten
-from table2qb_spark.lake.merge import merge_upsert
+from table2qb_spark.lake.merge import merge_patch, merge_upsert
 from table2qb_spark.lake.table import LakeTable
 
 
@@ -53,9 +55,8 @@ def malformed_reason_expr(
     valid_ops: tuple[str, ...] = ("I", "U", "D"),
 ):
     """Null iff the event is well-formed; else the first failing check
-    ('null_seq' | 'bad_op' | 'null_key:<col>'). Shared by the batch
-    replayer's DLQ and the streaming front-end so both ingest paths
-    quarantine by identical rules."""
+    ('null_seq' | 'bad_op' | 'null_key:<col>'). The DLQ rule of
+    ``apply_change_batch`` (so of both ingest paths) and of cdc/dlq.py."""
     reason = F.when(F.col(seq_col).isNull(), F.lit("null_seq")).when(
         F.col(op_col).isNull() | ~F.col(op_col).isin(*valid_ops),
         F.lit("bad_op"),
@@ -63,6 +64,158 @@ def malformed_reason_expr(
     for k in key_cols:
         reason = reason.when(F.col(k).isNull(), F.lit(f"null_key:{k}"))
     return reason
+
+
+def check_merge_engine(merge_engine: str, merge_on_read: bool) -> None:
+    """Reject a bad engine combination before any I/O. "upsert" =
+    full-row-image last-writer-wins; "patch" = partial-update per-column
+    last-non-null-wins (cdc/patch.py / lake.merge.merge_patch) for
+    MINIMAL-row-image / $set-shaped logs. Patch applies per-bucket COW
+    rewrites, so it composes with staging but not with merge-on-read
+    (equality deletes mask whole superseded ROWS — a partial payload has no
+    full row to append)."""
+    if merge_engine not in ("upsert", "patch"):
+        raise ValueError(f"Unknown merge_engine {merge_engine!r}")
+    if merge_engine == "patch" and merge_on_read:
+        raise ValueError("merge_engine='patch' requires copy-on-write "
+                         "(merge-on-read appends full row images)")
+
+
+def append_metrics_row(
+    table: LakeTable,
+    source: str,
+    batch: int,
+    commit_id: str,
+    stats: dict,
+    seconds: float,
+    dlq_events: int = 0,
+    seq_start: int | None = None,
+    seq_end: int | None = None,
+    lag_events: int | None = None,
+) -> dict:
+    """Append one batch's row to ``_meta/metrics.jsonl`` and return it.
+    Every ingest path (``source`` = replay / stream / bucketed) writes this
+    key set; a value the path cannot know is null. ``strategy``, the event
+    counts and ``max_seq`` come from the merge's returned ``stats``, so a
+    staged (unpublished) commit reports its own values, not the parent
+    snapshot's."""
+    upserts, deletes = stats.get("upserts"), stats.get("deletes")
+    n_events = None if upserts is None else int(upserts) + int(deletes or 0)
+    row = {
+        "batch": batch,
+        "commit_id": commit_id,
+        "source": source,
+        "strategy": stats.get("strategy"),
+        "seq_start": seq_start,
+        "seq_end": seq_end,
+        "batch_events": n_events,
+        "upserts": upserts,
+        "deletes": deletes,
+        "buckets_touched": stats.get("affected_buckets", 0),
+        "seconds": round(seconds, 3),
+        "events_per_sec": (
+            round(n_events / seconds, 1) if n_events is not None and seconds else None
+        ),
+        "max_seq": stats.get("max_seq"),
+        "lag_events": lag_events,
+        "dlq_events": dlq_events,
+        "ts": time.time(),
+    }
+    with open(os.path.join(table.path, "_meta", "metrics.jsonl"), "a", encoding="utf-8") as f:
+        f.write(json.dumps(row) + "\n")
+    return row
+
+
+def apply_change_batch(
+    table: LakeTable,
+    batch_df: DataFrame,
+    commit_id: str,
+    *,
+    source: str,
+    batch: int,
+    summary_update: dict,
+    op_col: str = "op",
+    seq_col: str = "seq",
+    payload_col: str = "payload_json",
+    dlq_dir: str | None = None,
+    valid_ops: tuple[str, ...] = ("I", "U", "D"),
+    merge_engine: str = "upsert",
+    merge_on_read: bool = False,
+    publish: bool = True,
+    two_phase_dedup: bool = False,
+    force_stats_pass: bool = False,
+    seq_start: int | None = None,
+    seq_end: int | None = None,
+    lag_events: int | None = None,
+) -> dict | None:
+    """Apply one change batch as commit ``commit_id`` — the ingest body the
+    seq-range replayer and the streaming ``foreachBatch`` both call — and
+    return its metrics row (see ``append_metrics_row``). Returns None when
+    the table already holds the commit: a resume from an earlier checkpoint
+    or a redelivered micro-batch is skipped before any write (exactly-once).
+
+    Order: DLQ quarantine (with ``dlq_dir``) -> content sha -> schema
+    reconcile (metadata-only commits) -> upsert / patch / merge-on-read
+    merge. A seq range ``seq_start..seq_end`` is also the upsert merge's
+    batch-size hint. ``force_stats_pass`` is for ``foreachBatch``, where
+    Observation metrics never fire.
+
+    DLQ: a malformed change event — unknown/null ``op``, null key column,
+    null ``seq`` — would otherwise be either silently mis-applied (an op
+    outside the vocabulary falls through merge's delete test and UPSERTS; a
+    null-keyed event becomes a live (null, ..) row) or silently dropped (a
+    null seq matches no replay seq range, ever). With ``dlq_dir`` they go to
+    ``dlq_dir/<commit_id>/`` with a ``dlq_reason`` column instead of the
+    merge. The write is mode=overwrite keyed by commit_id, so a crash-rerun
+    of an uncommitted batch rewrites the same directory (never duplicates);
+    the reported count is a parquet-footer read, not a second scan."""
+    if table.has_commit(commit_id):
+        return None
+    t0 = time.time()
+    dlq_events = 0
+    if dlq_dir is not None:
+        from table2qb_spark.ops.prep import _parquet_rows
+
+        reason = malformed_reason_expr(
+            op_col, seq_col, table.snapshot().key_columns, valid_ops
+        )
+        out = os.path.join(dlq_dir, commit_id)
+        batch_df.where(reason.isNotNull()).withColumn(
+            "dlq_reason", reason
+        ).write.mode("overwrite").parquet(out)
+        dlq_events = _parquet_rows(out)
+        batch_df = batch_df.where(reason.isNull())
+    # per-row invariant (BASELINE input_hint): content sha256 computed at
+    # ingest — never taken from the log, whose hash may be stale — and
+    # stored alongside the row, so state verification never re-reads content
+    schema_names = {c["name"] for c in table.snapshot().current_schema()}
+    if "content_sha" in schema_names and "content" in batch_df.columns:
+        batch_df = batch_df.withColumn("content_sha", F.sha2(F.col("content"), 256))
+    # schema evolution first (metadata-only commits), then flat MERGE
+    batch_df = reconcile_and_flatten(table, batch_df, commit_id, payload_col)
+    merge_args = dict(
+        op_col=op_col, seq_col=seq_col, summary_update=summary_update, publish=publish
+    )
+    if merge_on_read:
+        from table2qb_spark.lake.mor import merge_mor
+
+        stats = merge_mor(table, batch_df, commit_id, **merge_args)
+    elif merge_engine == "patch":
+        stats = merge_patch(table, batch_df, commit_id, **merge_args)
+    else:
+        stats = merge_upsert(
+            table,
+            batch_df,
+            commit_id,
+            two_phase_dedup=two_phase_dedup,
+            batch_size_hint=None if seq_start is None else seq_end - seq_start + 1,
+            force_stats_pass=force_stats_pass,
+            **merge_args,
+        )
+    return append_metrics_row(
+        table, source, batch, commit_id, stats, time.time() - t0,
+        dlq_events, seq_start, seq_end, lag_events,
+    )
 
 
 @dataclass
@@ -92,19 +245,7 @@ class ChangeLogReplayer:
         stage: bool = False,
         merge_engine: str = "upsert",
     ):
-        # merge engine: "upsert" = full-row-image last-writer-wins;
-        # "patch" = partial-update per-column last-non-null-wins
-        # (cdc/patch.py / lake.merge.merge_patch) for MINIMAL-row-image /
-        # $set-shaped logs. Patch applies per-bucket COW rewrites, so it
-        # composes with staging but not with merge-on-read (equality
-        # deletes mask whole superseded ROWS — a partial payload has no
-        # full row to append). Validated before any I/O so a bad combo
-        # fails fast.
-        if merge_engine not in ("upsert", "patch"):
-            raise ValueError(f"Unknown merge_engine {merge_engine!r}")
-        if merge_engine == "patch" and merge_on_read:
-            raise ValueError("merge_engine='patch' requires copy-on-write "
-                             "(merge-on-read appends full row images)")
+        check_merge_engine(merge_engine, merge_on_read)
         self.merge_engine = merge_engine
         self.spark = spark
         self.table = table
@@ -189,129 +330,47 @@ class ChangeLogReplayer:
         start = lo + batch_index * self.batch_events
         return start, start + self.batch_events - 1
 
-    # ----- dead-letter queue ----------------------------------------------------
-
-    def _quarantine(
-        self, batch: DataFrame, batch_index: int, commit_id: str
-    ) -> tuple[DataFrame, int]:
-        """Split a batch slice into (valid, quarantined). A malformed change
-        event — unknown/null ``op``, null key column, null ``seq`` — would
-        otherwise be either silently mis-applied (an op outside the
-        vocabulary falls through merge's delete test and UPSERTS; a
-        null-keyed event becomes a live (null, ..) row) or silently dropped
-        (a null seq matches no batch range, ever). With ``dlq_dir`` set they
-        are written to ``dlq_dir/<commit_id>/`` with a ``dlq_reason`` column
-        and excluded from the merge.
-
-        Exactly-once: the DLQ write is mode=overwrite keyed by commit_id, so
-        a crash-rerun of an uncommitted batch rewrites the same directory
-        (never duplicates), and a replay skipping an already-committed batch
-        never touches its DLQ dir. Null-seq events belong to NO seq range,
-        so batch 0 claims them (a resume past batch 0 does not re-scan
-        them — their quarantine already happened in the original run).
-        Reported count is a parquet-footer read, not a second scan. The
-        streaming front-end quarantines per micro-batch with the same
-        ``malformed_reason_expr`` (no batch-0 special case there: its
-        micro-batches are file-sliced, so null-seq rows do arrive)."""
-        reason = malformed_reason_expr(
-            self.op_col,
-            self.seq_col,
-            self.table.snapshot().key_columns,
-            self.valid_ops,
-        )
-        if batch_index == 0:
-            batch = batch.unionByName(
-                self.events.where(F.col(self.seq_col).isNull())
-            )
-        out = os.path.join(self.dlq_dir, commit_id)
-        batch.where(reason.isNotNull()).withColumn(
-            "dlq_reason", reason
-        ).write.mode("overwrite").parquet(out)
-        from table2qb_spark.ops.prep import _parquet_rows
-
-        return batch.where(reason.isNull()), _parquet_rows(out)
-
     # ----- single batch --------------------------------------------------------
 
     def apply_batch(self, batch_index: int, lo: int, hi_total: int) -> BatchResult:
         commit_id = f"cdc-{batch_index:08d}"
         start, end = self.batch_range(batch_index, lo)
-        if self.table.has_commit(commit_id):
-            return BatchResult(batch_index, commit_id, 0, True, {})
-        t0 = time.time()
         batch = self.events.where(
             (F.col(self.seq_col) >= start) & (F.col(self.seq_col) <= end)
         )
-        dlq_events = 0
-        if self.dlq_dir is not None:
-            batch, dlq_events = self._quarantine(batch, batch_index, commit_id)
-        # per-row invariant (BASELINE input_hint): content sha256 computed at
-        # ingest and stored alongside the row, so state verification never
-        # needs to re-read content
-        schema_names = {c["name"] for c in self.table.snapshot().current_schema()}
-        if "content_sha" in schema_names and "content" in batch.columns:
-            batch = batch.withColumn("content_sha", F.sha2(F.col("content"), 256))
-        # schema evolution first (metadata-only commits), then flat MERGE
-        batch = reconcile_and_flatten(self.table, batch, commit_id, self.payload_col)
-        if self.merge_on_read:
-            from table2qb_spark.lake.mor import merge_mor
-
-            stats = merge_mor(
-                self.table,
-                batch,
-                commit_id,
-                op_col=self.op_col,
-                seq_col=self.seq_col,
-                summary_update={"last_batch": batch_index, "range_end": end},
-                publish=not self.stage,
-            )
-        elif self.merge_engine == "patch":
-            from table2qb_spark.lake.merge import merge_patch
-
-            stats = merge_patch(
-                self.table,
-                batch,
-                commit_id,
-                op_col=self.op_col,
-                seq_col=self.seq_col,
-                summary_update={"last_batch": batch_index, "range_end": end},
-                publish=not self.stage,
-            )
-        else:
-            stats = merge_upsert(
-                self.table,
-                batch,
-                commit_id,
-                op_col=self.op_col,
-                seq_col=self.seq_col,
-                two_phase_dedup=self.two_phase_dedup,
-                # max_seq is NOT pinned to the range end here: merge records
-                # the actually-observed max sequence (ops truth); resume keys
-                # off last_batch, which is range-based
-                summary_update={"last_batch": batch_index, "range_end": end},
-                batch_size_hint=end - start + 1,
-                publish=not self.stage,
-            )
-        elapsed = time.time() - t0
-        n_events = int(stats.get("upserts", 0)) + int(stats.get("deletes", 0))
-        metrics = {
-            "batch": batch_index,
-            "commit_id": commit_id,
-            "seq_start": start,
-            "seq_end": end,
-            "batch_events": n_events,
-            "upserts": stats.get("upserts", 0),
-            "deletes": stats.get("deletes", 0),
-            "buckets_touched": stats.get("affected_buckets", 0),
-            "seconds": round(elapsed, 3),
-            "events_per_sec": round((end - start + 1) / elapsed, 1) if elapsed else None,
-            "lag_events": max(0, hi_total - end),
-            "dlq_events": dlq_events,
-            "ts": time.time(),
-        }
-        with open(self.metrics_path, "a", encoding="utf-8") as f:
-            f.write(json.dumps(metrics) + "\n")
-        return BatchResult(batch_index, commit_id, n_events, False, metrics)
+        if batch_index == 0 and self.dlq_dir is not None:
+            # null-seq events belong to NO seq range, so batch 0 hands them
+            # to the DLQ (a resume past batch 0 does not re-scan them: their
+            # quarantine already happened in the original run)
+            batch = batch.unionByName(self.events.where(F.col(self.seq_col).isNull()))
+        metrics = apply_change_batch(
+            self.table,
+            batch,
+            commit_id,
+            source="replay",
+            batch=batch_index,
+            # max_seq is NOT pinned to the range end here: merge records the
+            # actually-observed max sequence (ops truth); resume keys off
+            # last_batch, which is range-based
+            summary_update={"last_batch": batch_index, "range_end": end},
+            op_col=self.op_col,
+            seq_col=self.seq_col,
+            payload_col=self.payload_col,
+            dlq_dir=self.dlq_dir,
+            valid_ops=self.valid_ops,
+            merge_engine=self.merge_engine,
+            merge_on_read=self.merge_on_read,
+            publish=not self.stage,
+            two_phase_dedup=self.two_phase_dedup,
+            seq_start=start,
+            seq_end=end,
+            lag_events=max(0, hi_total - end),
+        )
+        if metrics is None:
+            return BatchResult(batch_index, commit_id, 0, True, {})
+        return BatchResult(
+            batch_index, commit_id, metrics["batch_events"] or 0, False, metrics
+        )
 
     # ----- full replay -----------------------------------------------------------
 

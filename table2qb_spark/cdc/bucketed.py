@@ -48,7 +48,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from table2qb_spark.cdc.apply import _leaf_column_index
+from table2qb_spark.cdc.apply import _leaf_column_index, append_metrics_row
 from table2qb_spark.lake.table import LakeTable, key_bucket_expr
 
 LAYOUT_FILE = "_layout.json"
@@ -137,7 +137,6 @@ class BucketedReplayer:
         self.delete_op = delete_op
         self.batch_events = batch_events
         self.buckets_per_job = max(1, buckets_per_job)
-        self.metrics_path = os.path.join(table.path, "_meta", "metrics.jsonl")
         self._event_buckets = sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(events_dir)
@@ -451,23 +450,12 @@ class BucketedReplayer:
                 break
             start = lo + i * self.batch_events
             end = start + self.batch_events - 1
+            commit_id = f"cdc-{i:08d}"
             t0 = time.time()
-            stats = self.apply_range(
-                f"cdc-{i:08d}", start, end, summary_update={"last_batch": i}
+            stats = self.apply_range(commit_id, start, end, summary_update={"last_batch": i})
+            append_metrics_row(
+                self.table, "bucketed", i, commit_id, stats, time.time() - t0,
+                seq_start=start, seq_end=end, lag_events=max(0, hi - end),
             )
-            elapsed = time.time() - t0
-            metrics = {
-                "batch": i,
-                "commit_id": f"cdc-{i:08d}",
-                "seq_start": start,
-                "seq_end": end,
-                "buckets_touched": stats.get("affected_buckets", 0),
-                "seconds": round(elapsed, 3),
-                "events_per_sec": round((end - start + 1) / elapsed, 1) if elapsed else None,
-                "lag_events": max(0, hi - end),
-                "mode": "bucketed",
-            }
-            with open(self.metrics_path, "a", encoding="utf-8") as f:
-                f.write(json.dumps(metrics) + "\n")
             out.append(stats)
         return out

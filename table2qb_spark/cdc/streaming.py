@@ -1,9 +1,10 @@
 """Structured Streaming front-end for the CDC engine.
 
-``readStream`` over the change-log directory -> ``foreachBatch`` -> the SAME
-``merge_upsert`` + schema-reconcile path the batch replayer uses. Streaming
-micro-batches are arrival-defined rather than seq-defined, so exactly-once
-relies on the same two mechanisms, composed:
+``readStream`` over the change-log directory -> ``foreachBatch`` ->
+``cdc.apply.apply_change_batch``, the ingest body the batch replayer calls
+too (DLQ, content sha, schema reconcile, upsert / patch / merge-on-read
+merge, metrics row). Streaming micro-batches are arrival-defined rather than
+seq-defined, so exactly-once relies on the same two mechanisms, composed:
 
 - Structured Streaming's checkpointLocation gives at-least-once redelivery of
   each micro-batch with a stable ``batch_id``;
@@ -35,12 +36,14 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from table2qb_spark.cdc.schema_evolution import reconcile_and_flatten
-from table2qb_spark.lake.merge import merge_upsert
+from table2qb_spark.cdc.apply import apply_change_batch, check_merge_engine
 from table2qb_spark.lake.table import LakeTable
+
+# re-exported: perfbench/trace.py wraps both names in this module too; a traced run dies without them
+from table2qb_spark.cdc.schema_evolution import reconcile_and_flatten  # noqa: F401
+from table2qb_spark.lake.merge import merge_upsert  # noqa: F401
 
 BOOKKEEPING_COLUMNS = [("_seq", "long"), ("_deleted", "boolean")]
 
@@ -206,7 +209,7 @@ def start_stream(
     ``dlq_dir``: quarantine malformed events (bad op / null key / null seq
     — ``cdc.apply.malformed_reason_expr``, the same rules as the batch
     replayer's DLQ) to ``dlq_dir/<commit_id>/`` per micro-batch instead of
-    merging them; adds ``dlq_events`` to the metrics row. Exactly-once: the
+    merging them; the metrics row's ``dlq_events`` counts them. Exactly-once: the
     quarantine write happens before the merge commit and is
     mode=overwrite keyed by the micro-batch commit_id, so a crash-redelivery
     rewrites the same directory and an already-committed micro-batch is
@@ -228,13 +231,9 @@ def start_stream(
     (``checkpoint_source_schema``), so a restart reads no parquet footer.
 
     ``max_files_per_trigger``: an int, or ``"auto"`` to size triggers to
-    ~4M events (env SPARK_GRAFT_STREAM_TRIGGER_EVENTS) from the backlog's
+    ~8M events (env SPARK_GRAFT_STREAM_TRIGGER_EVENTS) from the backlog's
     parquet footers (see auto_max_files_per_trigger)."""
-    if merge_engine not in ("upsert", "patch"):
-        raise ValueError(f"Unknown merge_engine {merge_engine!r}")
-    if merge_engine == "patch" and merge_on_read:
-        raise ValueError("merge_engine='patch' requires copy-on-write "
-                         "(merge-on-read appends full row images)")
+    check_merge_engine(merge_engine, merge_on_read)
     if max_files_per_trigger == "auto":
         max_files_per_trigger = auto_max_files_per_trigger(spark, events_dir)
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -262,97 +261,21 @@ def start_stream(
     app_id = checkpoint_app_id(checkpoint_dir)
 
     def apply_micro_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import time
-
-        commit_id = f"stream-{app_id}-{batch_id:08d}"
-        if table.has_commit(commit_id):
-            return  # redelivered micro-batch: exactly-once skip
-        t0 = time.time()
-        # per-row invariant parity with ChangeLogReplayer (BASELINE
-        # input_hint): content sha256 computed at ingest when the table
-        # declares the column and the stream doesn't carry it
-        schema_names = {c["name"] for c in table.snapshot().current_schema()}
-        if (
-            "content_sha" in schema_names
-            and "content_sha" not in batch_df.columns
-            and "content" in batch_df.columns
-        ):
-            batch_df = batch_df.withColumn(
-                "content_sha", F.sha2(F.col("content"), 256)
-            )
-        dlq_events = 0
-        if dlq_dir is not None:
-            from table2qb_spark.cdc.apply import malformed_reason_expr
-            from table2qb_spark.ops.prep import _parquet_rows
-
-            reason = malformed_reason_expr(
-                op_col, seq_col, table.snapshot().key_columns
-            )
-            out_dir = os.path.join(dlq_dir, commit_id)
-            batch_df.where(reason.isNotNull()).withColumn(
-                "dlq_reason", reason
-            ).write.mode("overwrite").parquet(out_dir)
-            dlq_events = _parquet_rows(out_dir)
-            batch_df = batch_df.where(reason.isNull())
-        flat = reconcile_and_flatten(table, batch_df, commit_id, payload_col)
-        if merge_on_read:
-            from table2qb_spark.lake.mor import merge_mor
-
-            # MOR never uses Observation (its stats come from explicit
-            # aggregates), so it is foreachBatch-safe as-is
-            stats = merge_mor(
-                table,
-                flat,
-                commit_id,
-                op_col=op_col,
-                seq_col=seq_col,
-                summary_update={"stream_batch": batch_id},
-            )
-        elif merge_engine == "patch":
-            from table2qb_spark.lake.merge import merge_patch
-
-            # patch runs its own explicit stats pre-pass — foreachBatch-safe
-            stats = merge_patch(
-                table,
-                flat,
-                commit_id,
-                op_col=op_col,
-                seq_col=seq_col,
-                summary_update={"stream_batch": batch_id},
-            )
-        else:
-            stats = merge_upsert(
-                table,
-                flat,
-                commit_id,
-                op_col=op_col,
-                seq_col=seq_col,
-                summary_update={"stream_batch": batch_id},
-                force_stats_pass=True,  # Observation doesn't fire in foreachBatch
-            )
-        # per-micro-batch metrics row, same file/shape as the batch
-        # replayer's (cdc/apply.py) so `cdc-status --table` reads both
-        # ingest paths; north_star: "per-partition throughput/lag metrics
-        # emitted per micro-batch"
-        elapsed = time.time() - t0
-        n_events = int(stats.get("upserts", 0) or 0) + int(stats.get("deletes", 0) or 0)
-        metrics = {
-            "batch": batch_id,
-            "commit_id": commit_id,
-            "source": "stream",
-            "batch_events": n_events,
-            "upserts": stats.get("upserts", 0),
-            "deletes": stats.get("deletes", 0),
-            "buckets_touched": stats.get("affected_buckets", 0),
-            "seconds": round(elapsed, 3),
-            "events_per_sec": round(n_events / elapsed, 1) if elapsed else None,
-            "max_seq": (table.snapshot().summary or {}).get("max_seq"),
-            "dlq_events": dlq_events,
-            "ts": time.time(),
-        }
-        metrics_path = os.path.join(table.path, "_meta", "metrics.jsonl")
-        with open(metrics_path, "a", encoding="utf-8") as f:
-            f.write(json.dumps(metrics) + "\n")
+        apply_change_batch(
+            table,
+            batch_df,
+            f"stream-{app_id}-{batch_id:08d}",
+            source="stream",
+            batch=batch_id,
+            summary_update={"stream_batch": batch_id},
+            op_col=op_col,
+            seq_col=seq_col,
+            payload_col=payload_col,
+            dlq_dir=dlq_dir,
+            merge_engine=merge_engine,
+            merge_on_read=merge_on_read,
+            force_stats_pass=True,  # Observation doesn't fire in foreachBatch
+        )
 
     return (
         stream.writeStream.foreachBatch(apply_micro_batch)

@@ -297,6 +297,7 @@ def merge_patch(
         "upserts": n_total - n_dels,
         "deletes": n_dels,
         "strategy": "patch-pruned" if use_pruning else "patch",
+        "max_seq": max_seq,
         "seconds": time.time() - t0,
     }
 
@@ -501,6 +502,7 @@ def merge_upsert(
             "upserts": n_total - n_dels,
             "deletes": n_dels,
             "strategy": "late-materialization",
+            "max_seq": got["max_seq"],
             "seconds": time.time() - t0,
         }
 
@@ -740,5 +742,6 @@ def merge_upsert(
         "deletes": n_dels,
         "strategy": ("pruned" if use_pruning
                      else "agg-cdf" if cdf_on else "single-pass"),
+        "max_seq": max_seq,
         "seconds": time.time() - t0,
     }

@@ -204,5 +204,6 @@ def merge_mor(
         "deletes": n_dels,
         "updates": int(got["existed"] or 0),
         "strategy": "mor",
+        "max_seq": got["max_seq"],
         "seconds": time.time() - t0,
     }

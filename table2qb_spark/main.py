@@ -2018,7 +2018,7 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--max-files-per-trigger", default="8",
                    metavar="N|auto",
                    help="micro-batch size in backlog files; 'auto' sizes "
-                        "triggers to ~4M events from the parquet footers "
+                        "triggers to ~8M events from the parquet footers "
                         "(env SPARK_GRAFT_STREAM_TRIGGER_EVENTS)")
     c.add_argument("--merge-engine", default="upsert",
                    choices=["upsert", "patch"],

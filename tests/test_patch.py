@@ -283,14 +283,21 @@ class TestMergePatchLake:
         assert r["content"] == "v10" and r["_seq"] == 10
 
     def test_patch_engine_rejects_merge_on_read(self, spark, tmp_path):
+        """Both ingest front-ends reject the combination with the same
+        error, before touching the (absent) log."""
         from table2qb_spark.cdc.apply import ChangeLogReplayer
+        from table2qb_spark.cdc.streaming import start_stream
 
         t = self._table(spark, tmp_path)
-        with pytest.raises(ValueError, match="copy-on-write"):
-            ChangeLogReplayer(
-                spark, t, str(tmp_path / "x"), merge_engine="patch",
+        log = str(tmp_path / "x")
+        with pytest.raises(ValueError, match="copy-on-write") as replay:
+            ChangeLogReplayer(spark, t, log, merge_engine="patch", merge_on_read=True)
+        with pytest.raises(ValueError) as stream:
+            start_stream(
+                spark, t, log, str(tmp_path / "ckpt"), merge_engine="patch",
                 merge_on_read=True,
             )
+        assert str(stream.value) == str(replay.value)
 
     def test_streaming_patch_engine_tails_new_files(self, spark, tmp_path):
         """Structured Streaming front-end with merge_engine='patch',
