@@ -28,14 +28,22 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import defaultdict
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from table2qb_spark.cdc.schema_evolution import reconcile_and_flatten
-from table2qb_spark.lake.merge import merge_patch, merge_upsert
-from table2qb_spark.lake.table import LakeTable
+from table2qb_spark.cdc.schema_evolution import (
+    RENAME_KEY,
+    parse_renames,
+    reconcile_and_flatten,
+)
+from table2qb_spark.lake.merge import BatchStats, merge_patch, merge_upsert, stats_aggs
+from table2qb_spark.lake.table import LakeTable, Snapshot, key_bucket_expr
+
+# per-phase seconds in every metrics row (null where a path skips the phase)
+PHASES = ("dlq_s", "prepass_s", "reconcile_s", "merge_s")
 
 
 def _leaf_column_index(md, name: str) -> int:
@@ -81,6 +89,77 @@ def check_merge_engine(merge_engine: str, merge_on_read: bool) -> None:
                          "(merge-on-read appends full row images)")
 
 
+@dataclass(frozen=True)
+class BatchPrepass:
+    """One batch's pre-pass: its distinct payload keys (sorted, without the
+    rename key), its rename directives folded in seq order, and the merge's
+    ``BatchStats`` (None when the pre-pass ran without ``op_col``)."""
+
+    payload_keys: list[str]
+    renames: dict[str, str]
+    stats: BatchStats | None
+
+
+EMPTY_PREPASS = BatchPrepass([], {}, BatchStats([], 0, 0, None))
+
+
+def batch_prepass(
+    snap: Snapshot,
+    df: DataFrame,
+    payload_col: str = "payload_json",
+    op_col: str | None = "op",
+    seq_col: str = "seq",
+    batch: Column | None = None,
+) -> dict[int, BatchPrepass]:
+    """Everything ingest must know about its batches before it merges, from
+    ONE aggregate over ``df`` grouped by (``batch``, bucket): per batch the
+    payload keys (``collect_set(map_keys(from_json(payload)))``), the rename
+    directives in seq order, and per bucket the event count, delete count
+    and max seq. The bucket is computed from the key columns cast to their
+    declared types, exactly as the merge buckets its rows. ``batch`` labels
+    each row's batch (default: one batch, 0); a batch with no rows has no
+    entry. ``op_col=None`` skips the bucket stats (schema discovery only:
+    ``stats`` is None, renames are ordered by payload text)."""
+    keys = snap.key_columns
+    group = [(F.lit(0) if batch is None else batch).alias("__batch")]
+    aggs = []
+    if op_col is not None:
+        decl = {c["name"]: c["type"] for c in snap.current_schema()}
+        group.append(key_bucket_expr(keys, snap.n_buckets, decl).alias("__bucket"))
+        aggs += stats_aggs(op_col, seq_col)
+    has_payload = payload_col in df.columns
+    if has_payload:
+        payload = F.col(payload_col)
+        seq = (F.col(seq_col) if op_col is not None else F.lit(None)).cast("long")
+        aggs += [
+            F.collect_set(
+                F.map_keys(F.from_json(payload, "map<string,string>"))
+            ).alias("keys"),
+            F.collect_list(
+                F.when(payload.contains(RENAME_KEY), F.struct(seq.alias("s"), payload.alias("p")))
+            ).alias("renames"),
+        ]
+    if not aggs:
+        return {}
+    by_batch = defaultdict(list)
+    for r in df.groupBy(*group).agg(*aggs).collect():
+        by_batch[int(r["__batch"])].append(r)
+    out = {}
+    for b, rows in by_batch.items():
+        found, directives = set(), []
+        if has_payload:
+            found = {k for r in rows for ks in r["keys"] for k in ks}
+            directives = sorted(
+                ((d["s"] is None, d["s"] or 0, d["p"]) for r in rows for d in r["renames"])
+            )
+        out[b] = BatchPrepass(
+            sorted(found - {RENAME_KEY}),
+            parse_renames(p for _, _, p in directives),
+            BatchStats.of(rows) if op_col is not None else None,
+        )
+    return out
+
+
 def append_metrics_row(
     table: LakeTable,
     source: str,
@@ -92,13 +171,15 @@ def append_metrics_row(
     seq_start: int | None = None,
     seq_end: int | None = None,
     lag_events: int | None = None,
+    phases: dict | None = None,
 ) -> dict:
     """Append one batch's row to ``_meta/metrics.jsonl`` and return it.
     Every ingest path (``source`` = replay / stream / bucketed) writes this
     key set; a value the path cannot know is null. ``strategy``, the event
     counts and ``max_seq`` come from the merge's returned ``stats``, so a
     staged (unpublished) commit reports its own values, not the parent
-    snapshot's."""
+    snapshot's. ``phases`` maps each of ``PHASES`` to its seconds; a phase
+    the path did not run for this batch is null."""
     upserts, deletes = stats.get("upserts"), stats.get("deletes")
     n_events = None if upserts is None else int(upserts) + int(deletes or 0)
     row = {
@@ -119,6 +200,7 @@ def append_metrics_row(
         "max_seq": stats.get("max_seq"),
         "lag_events": lag_events,
         "dlq_events": dlq_events,
+        **{k: None if (phases or {}).get(k) is None else round(phases[k], 3) for k in PHASES},
         "ts": time.time(),
     }
     with open(os.path.join(table.path, "_meta", "metrics.jsonl"), "a", encoding="utf-8") as f:
@@ -143,7 +225,8 @@ def apply_change_batch(
     merge_on_read: bool = False,
     publish: bool = True,
     two_phase_dedup: bool = False,
-    force_stats_pass: bool = False,
+    prepass: BatchPrepass | None = None,
+    prepass_s: float | None = None,
     seq_start: int | None = None,
     seq_end: int | None = None,
     lag_events: int | None = None,
@@ -154,11 +237,13 @@ def apply_change_batch(
     the table already holds the commit: a resume from an earlier checkpoint
     or a redelivered micro-batch is skipped before any write (exactly-once).
 
-    Order: DLQ quarantine (with ``dlq_dir``) -> content sha -> schema
-    reconcile (metadata-only commits) -> upsert / patch / merge-on-read
-    merge. A seq range ``seq_start..seq_end`` is also the upsert merge's
-    batch-size hint. ``force_stats_pass`` is for ``foreachBatch``, where
-    Observation metrics never fire.
+    Order: DLQ quarantine (with ``dlq_dir``) -> content sha -> pre-pass
+    (``batch_prepass``: payload keys, renames and the merge's bucket stats
+    in one aggregate) -> schema reconcile (metadata-only commits) -> upsert
+    / patch / merge-on-read merge. A caller that ran the pre-pass already
+    (the replayer, once per run) passes this batch's ``prepass``, and the
+    run's ``prepass_s`` with the first batch it applies; the row's
+    ``seconds`` then include it.
 
     DLQ: a malformed change event — unknown/null ``op``, null key column,
     null ``seq`` — would otherwise be either silently mis-applied (an op
@@ -172,6 +257,8 @@ def apply_change_batch(
     if table.has_commit(commit_id):
         return None
     t0 = time.time()
+    phases = dict.fromkeys(PHASES)
+    phases["prepass_s"] = prepass_s
     dlq_events = 0
     if dlq_dir is not None:
         from table2qb_spark.ops.prep import _parquet_rows
@@ -185,16 +272,29 @@ def apply_change_batch(
         ).write.mode("overwrite").parquet(out)
         dlq_events = _parquet_rows(out)
         batch_df = batch_df.where(reason.isNull())
+        phases["dlq_s"] = time.time() - t0
     # per-row invariant (BASELINE input_hint): content sha256 computed at
     # ingest — never taken from the log, whose hash may be stale — and
     # stored alongside the row, so state verification never re-reads content
     schema_names = {c["name"] for c in table.snapshot().current_schema()}
     if "content_sha" in schema_names and "content" in batch_df.columns:
         batch_df = batch_df.withColumn("content_sha", F.sha2(F.col("content"), 256))
+    if prepass is None:
+        t = time.time()
+        prepass = batch_prepass(
+            table.snapshot(), batch_df, payload_col, op_col, seq_col
+        ).get(0, EMPTY_PREPASS)
+        phases["prepass_s"] = time.time() - t
     # schema evolution first (metadata-only commits), then flat MERGE
-    batch_df = reconcile_and_flatten(table, batch_df, commit_id, payload_col)
+    t = time.time()
+    batch_df = reconcile_and_flatten(
+        table, batch_df, commit_id, payload_col, prepass.payload_keys, prepass.renames
+    )
+    phases["reconcile_s"] = time.time() - t
+    t = time.time()
     merge_args = dict(
-        op_col=op_col, seq_col=seq_col, summary_update=summary_update, publish=publish
+        op_col=op_col, seq_col=seq_col, summary_update=summary_update,
+        publish=publish, batch_stats=prepass.stats,
     )
     if merge_on_read:
         from table2qb_spark.lake.mor import merge_mor
@@ -204,17 +304,13 @@ def apply_change_batch(
         stats = merge_patch(table, batch_df, commit_id, **merge_args)
     else:
         stats = merge_upsert(
-            table,
-            batch_df,
-            commit_id,
-            two_phase_dedup=two_phase_dedup,
-            batch_size_hint=None if seq_start is None else seq_end - seq_start + 1,
-            force_stats_pass=force_stats_pass,
-            **merge_args,
+            table, batch_df, commit_id, two_phase_dedup=two_phase_dedup, **merge_args
         )
+    phases["merge_s"] = time.time() - t
+    seconds = time.time() - t0 + (prepass_s or 0)
     return append_metrics_row(
-        table, source, batch, commit_id, stats, time.time() - t0,
-        dlq_events, seq_start, seq_end, lag_events,
+        table, source, batch, commit_id, stats, seconds,
+        dlq_events, seq_start, seq_end, lag_events, phases,
     )
 
 
@@ -332,7 +428,37 @@ class ChangeLogReplayer:
 
     # ----- single batch --------------------------------------------------------
 
-    def apply_batch(self, batch_index: int, lo: int, hi_total: int) -> BatchResult:
+    def _valid(self, df: DataFrame) -> DataFrame:
+        """``df`` without the events the DLQ quarantines (all of it when
+        there is no DLQ: then malformed events go to the merge)."""
+        if self.dlq_dir is None:
+            return df
+        reason = malformed_reason_expr(
+            self.op_col, self.seq_col, self.table.snapshot().key_columns, self.valid_ops
+        )
+        return df.where(reason.isNull())
+
+    def prepass(self, first: int, last: int, lo: int) -> dict[int, BatchPrepass]:
+        """``batch_prepass`` over batches ``first..last`` at once: one
+        aggregate for the whole run instead of discovery scans per commit.
+        Quarantined events are left out, so a DLQ'd payload never evolves
+        the schema."""
+        start, end = self.batch_range(first, lo)[0], self.batch_range(last, lo)[1]
+        seq = F.col(self.seq_col)
+        events = self._valid(self.events.where((seq >= start) & (seq <= end)))
+        return batch_prepass(
+            self.table.snapshot(), events, self.payload_col, self.op_col,
+            self.seq_col, batch=F.floor((seq - lo) / self.batch_events),
+        )
+
+    def apply_batch(
+        self,
+        batch_index: int,
+        lo: int,
+        hi_total: int,
+        prepass: BatchPrepass | None = None,
+        prepass_s: float | None = None,
+    ) -> BatchResult:
         commit_id = f"cdc-{batch_index:08d}"
         start, end = self.batch_range(batch_index, lo)
         batch = self.events.where(
@@ -362,6 +488,8 @@ class ChangeLogReplayer:
             merge_on_read=self.merge_on_read,
             publish=not self.stage,
             two_phase_dedup=self.two_phase_dedup,
+            prepass=prepass,
+            prepass_s=prepass_s,
             seq_start=start,
             seq_end=end,
             lag_events=max(0, hi_total - end),
@@ -379,17 +507,29 @@ class ChangeLogReplayer:
         ``stage`` mode at most ONE batch is applied regardless of
         ``max_batches``: a second batch would have to merge against state
         the unpublished first batch hasn't made visible (its snapshot slot
-        is held), so staged ingest is publish-one-audit-one by design."""
+        is held), so staged ingest is publish-one-audit-one by design.
+
+        One ``prepass`` covers every batch this run applies; the first
+        batch's metrics row carries its seconds."""
         if self.stage:
             max_batches = 1 if max_batches is None else min(1, max_batches)
         lo, hi = self.seq_bounds()
         n_batches = (hi - lo) // self.batch_events + 1
         first = self.last_applied_batch() + 1
+        if max_batches is not None:
+            n_batches = min(n_batches, first + max_batches)
+        if first >= n_batches:
+            return []
+        t0 = time.time()
+        pre = self.prepass(first, n_batches - 1, lo)
+        prepass_s = time.time() - t0
         results = []
         for i in range(first, n_batches):
-            if max_batches is not None and len(results) >= max_batches:
-                break
-            results.append(self.apply_batch(i, lo, hi))
+            results.append(
+                self.apply_batch(
+                    i, lo, hi, pre.get(i, EMPTY_PREPASS), prepass_s if i == first else None
+                )
+            )
         return results
 
     def metrics(self) -> list[dict]:

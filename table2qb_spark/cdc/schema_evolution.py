@@ -4,8 +4,10 @@ Change events may carry a ``payload_json`` column: a JSON object of extra
 column values (ADD COLUMN when a new key appears), or a rename directive
 ``{"__rename__": {"old": "new"}}``. Per batch the reconciler:
 
-1. collects the distinct payload keys in the batch (one tiny distinct job
-   over exploded map keys — map-side combined);
+1. takes the batch's distinct payload keys and its rename directives (in
+   seq order) from the ingest core's one pre-pass per batch
+   (``cdc.apply.batch_prepass``), which finds them in the same aggregate as
+   the merge's bucket stats — reconcile itself runs no Spark job;
 2. diffs them against the table's current schema;
 3. issues metadata-only schema commits (LakeTable.evolve_schema — the
    equivalent of Iceberg ``ALTER TABLE ADD/RENAME COLUMN``);
@@ -16,6 +18,7 @@ column values (ADD COLUMN when a new key appears), or a rename directive
 from __future__ import annotations
 
 import json
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -25,35 +28,13 @@ from table2qb_spark.lake.table import LakeTable
 RENAME_KEY = "__rename__"
 
 
-def payload_keys(batch_df: DataFrame, payload_col: str = "payload_json") -> list[str]:
-    if payload_col not in batch_df.columns:
-        return []
-    rows = (
-        batch_df.where(F.col(payload_col).isNotNull())
-        .select(
-            F.explode(
-                F.map_keys(F.from_json(F.col(payload_col), "map<string,string>"))
-            ).alias("k")
-        )
-        .distinct()
-        .collect()
-    )
-    return sorted(r["k"] for r in rows)
-
-
-def extract_renames(batch_df: DataFrame, payload_col: str = "payload_json") -> dict[str, str]:
-    """Rename directives are rare control events — collect just those rows."""
-    if payload_col not in batch_df.columns:
-        return {}
-    rows = (
-        batch_df.where(F.col(payload_col).contains(RENAME_KEY))
-        .select(payload_col)
-        .collect()
-    )
+def parse_renames(payloads: Iterable[str]) -> dict[str, str]:
+    """Fold the rename directives of ``payloads`` (raw JSON, in seq order)
+    into one old -> new map; a payload that is not valid JSON is skipped."""
     renames: dict[str, str] = {}
-    for r in rows:
+    for p in payloads:
         try:
-            d = json.loads(r[0])
+            d = json.loads(p)
         except (TypeError, ValueError):
             continue
         renames.update(d.get(RENAME_KEY, {}))
@@ -65,27 +46,35 @@ def reconcile_and_flatten(
     batch_df: DataFrame,
     batch_commit_id: str,
     payload_col: str = "payload_json",
+    payload_keys: list[str] | None = None,
+    renames: dict[str, str] | None = None,
 ) -> DataFrame:
     """Evolve the table schema to cover this batch's payload, then return the
-    batch with payload keys as real columns (string-typed; absent -> null)."""
-    renames = extract_renames(batch_df, payload_col)
+    batch with payload keys as real columns (string-typed; absent -> null).
+    ``payload_keys`` / ``renames`` are the batch's pre-pass results; a caller
+    without them (the DLQ re-drive) gets them from one
+    ``batch_prepass`` over ``batch_df``."""
+    if payload_col not in batch_df.columns:
+        return batch_df
+    if payload_keys is None or renames is None:
+        from table2qb_spark.cdc.apply import EMPTY_PREPASS, batch_prepass
+
+        pre = batch_prepass(
+            table.snapshot(), batch_df, payload_col, op_col=None
+        ).get(0, EMPTY_PREPASS)
+        payload_keys, renames = pre.payload_keys, pre.renames
     if renames:
         table.evolve_schema(rename_columns=renames, commit_id=f"{batch_commit_id}-rename")
 
-    keys = [k for k in payload_keys(batch_df, payload_col) if k != RENAME_KEY]
     schema_names = {c["name"] for c in table.snapshot().current_schema()}
-    new_cols = [k for k in keys if k not in schema_names]
+    new_cols = [k for k in payload_keys if k not in schema_names]
     if new_cols:
         table.evolve_schema(
             add_columns=[(k, "string") for k in new_cols],
             commit_id=f"{batch_commit_id}-addcols",
         )
 
-    if payload_col not in batch_df.columns or not keys:
-        return batch_df.drop(payload_col) if payload_col in batch_df.columns else batch_df
-
     pm = F.from_json(F.col(payload_col), "map<string,string>")
-    out = batch_df
-    for k in keys:
-        out = out.withColumn(k, F.element_at(pm, F.lit(k)))
-    return out.drop(payload_col)
+    return batch_df.withColumns(
+        {k: F.element_at(pm, F.lit(k)) for k in payload_keys}
+    ).drop(payload_col)

@@ -2,9 +2,10 @@
 
 ``readStream`` over the change-log directory -> ``foreachBatch`` ->
 ``cdc.apply.apply_change_batch``, the ingest body the batch replayer calls
-too (DLQ, content sha, schema reconcile, upsert / patch / merge-on-read
-merge, metrics row). Streaming micro-batches are arrival-defined rather than
-seq-defined, so exactly-once relies on the same two mechanisms, composed:
+too (DLQ, content sha, one pre-pass per trigger, schema reconcile, upsert /
+patch / merge-on-read merge, metrics row). Streaming micro-batches are
+arrival-defined rather than seq-defined, so exactly-once relies on the same
+two mechanisms, composed:
 
 - Structured Streaming's checkpointLocation gives at-least-once redelivery of
   each micro-batch with a stable ``batch_id``;
@@ -189,7 +190,7 @@ def start_stream(
 
     ``merge_engine="patch"``: partial-update per-column semantics
     (lake.merge.merge_patch) instead of full-row-image last-writer-wins.
-    foreachBatch-safe (explicit stats aggregate, no Observation). On
+    foreachBatch-safe (stats from the ingest pre-pass, no Observation). On
     SEQ-GUARDED tables, late/redelivered events are superseded WHOLESALE
     (no corruption): an event re-delivered in a later micro-batch enters
     the fold BELOW the stored row image's ``_seq`` and is shadowed by the
@@ -274,7 +275,6 @@ def start_stream(
             dlq_dir=dlq_dir,
             merge_engine=merge_engine,
             merge_on_read=merge_on_read,
-            force_stats_pass=True,  # Observation doesn't fire in foreachBatch
         )
 
     return (

@@ -9,11 +9,17 @@ UTF-8 bytes; ``int``/``smallint``/``tinyint`` hash 4 little-endian bytes and
 can compute a key's bucket or a value's bloom positions here, in plain
 Python, instead of running a one-row Spark job per call.
 ``tests/test_hashing.py`` pins this twin to Spark bit for bit.
+
+Spark's ``hash`` (Murmur3 x86_32, seed 42) places rows on shuffle
+partitions: ``repartition(p, col)`` sends a row to ``pmod(hash(col), p)``.
+``murmur3_int`` twins it for one int, so ``partition_salts`` can pick, for
+each partition, an int that lands there (``table.place_buckets``).
 """
 
 from __future__ import annotations
 
 import datetime
+import functools
 import struct
 from collections.abc import Sequence
 from typing import Any
@@ -36,6 +42,42 @@ INTEGRAL_BITS = {
 }
 # key types ``key_bucket`` can render (with the aliases above)
 KEY_TYPES = ("string", "tinyint", "smallint", "int", "bigint", "boolean", "date")
+
+
+_M32 = (1 << 32) - 1
+
+
+def _rotl32(x: int, r: int) -> int:
+    return ((x << r) | (x >> (32 - r))) & _M32
+
+
+def murmur3_int(v: int, seed: int = SEED) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt``: ``hash(v)`` of an int column, as
+    the signed int Spark returns."""
+    k = _rotl32((v & _M32) * 0xCC9E2D51 & _M32, 15) * 0x1B873593 & _M32
+    h = (_rotl32((seed & _M32) ^ k, 13) * 5 + 0xE6546B64) & _M32
+    h ^= 4  # input length in bytes
+    h ^= h >> 16
+    h = h * 0x85EBCA6B & _M32
+    h ^= h >> 13
+    h = h * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.lru_cache(maxsize=None)
+def partition_salts(n_partitions: int) -> tuple[int, ...]:
+    """The smallest non-negative int that ``repartition(n_partitions, .)``
+    sends to partition ``p``, for each ``p`` in order."""
+    salts: list[int | None] = [None] * n_partitions
+    left, s = n_partitions, 0
+    while left:
+        p = murmur3_int(s) % n_partitions
+        if salts[p] is None:
+            salts[p] = s
+            left -= 1
+        s += 1
+    return tuple(salts)
 
 
 def _rotl(x: int, r: int) -> int:

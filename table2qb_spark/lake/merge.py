@@ -30,13 +30,21 @@ Strategies:
   ~2x the single-pass throughput at every core count (BENCH.md); gated by
   batch size (the broadcast is key-set-sized).
 - **single-pass** (bursts/backfills into non-empty tables): everything in
-  ONE Spark action; batch stats ride along via ``pyspark.sql.Observation``
-  (no extra pass).
-- **pruned** (steady-state CDC: batch small vs table): a cheap pre-pass over
-  the deduped batch finds the touched buckets; only those buckets' files are
-  read and rewritten (copy-on-write). At 100 TB this is the default — batch
-  cost scales with batch locality, not table size. (Also used under
-  foreachBatch, where Observation metrics never fire.)
+  ONE Spark action.
+- **pruned** (steady-state CDC: batch small vs table): only the touched
+  buckets' files are read and rewritten (copy-on-write). At 100 TB this is
+  the default — batch cost scales with batch locality, not table size.
+
+Batch stats (touched buckets, event and delete counts, max seq) come from
+the caller as ``batch_stats``: the ingest core (``cdc.apply``) computes them
+in its one pre-pass per batch, alongside schema discovery. A direct caller
+that passes none gets them from a ``pyspark.sql.Observation`` riding on the
+merge's own job, or, where the strategy needs the buckets before the merge
+(pruned, patch, merge-on-read), from one narrow aggregate.
+
+Bucket placement: rows reach the write through ``table.place_buckets``, so
+bucket ``b`` sits on task ``b mod P`` and the bucket window runs inside that
+one exchange.
 
 Session-state caveat (Spark 4.1): the first ``Observation`` use materializes
 ``SparkSession.observationManager`` (a lazy val, NOT java-Serializable).
@@ -51,16 +59,85 @@ from __future__ import annotations
 
 import os
 import time
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from table2qb_spark.cdc.dedup import dedup_max_seq
-from table2qb_spark.lake.table import LakeTable, key_bucket_expr
+from table2qb_spark.lake.table import LakeTable, key_bucket_expr, place_buckets
 
-# Batches larger than this fraction of the table's rows skip the pruning
-# pre-pass (they would touch ~every bucket anyway).
+# Batches larger than this fraction of the table's rows are not pruned to
+# their touched buckets (they would touch ~every bucket anyway).
 PRUNE_THRESHOLD = 0.2
+
+
+@dataclass(frozen=True)
+class BatchStats:
+    """What a merge needs to know about its batch before it runs: the
+    buckets the batch touches (sorted), its event and delete counts, and its
+    max seq (None when no event has one)."""
+
+    buckets: list[int]
+    n: int
+    deletes: int
+    max_seq: int | None
+
+    @classmethod
+    def of(cls, rows) -> "BatchStats":
+        """Sum per-bucket rows carrying ``__bucket`` and ``stats_aggs``."""
+        seqs = [r["max_seq"] for r in rows if r["max_seq"] is not None]
+        return cls(
+            sorted(int(r["__bucket"]) for r in rows),
+            sum(int(r["n"]) for r in rows),
+            sum(int(r["deletes"] or 0) for r in rows),
+            max(seqs, default=None),
+        )
+
+
+def stats_aggs(op_col: str, seq_col: str, delete_op: str = "D") -> list[Column]:
+    """The per-bucket stats aggregates: ``n``, ``deletes``, ``max_seq``."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col(op_col) == delete_op, 1).otherwise(0)).alias("deletes"),
+        F.max(F.col(seq_col).cast("long")).alias("max_seq"),
+    ]
+
+
+def collect_batch_stats(
+    batch_sel: DataFrame, keys: list[str], n_buckets: int, delete_op: str = "D"
+) -> BatchStats:
+    """One narrow aggregate over a merge's ``batch_sel`` (keys already cast,
+    ``__op`` / ``__seq``) — for direct callers that passed no stats."""
+    return BatchStats.of(
+        batch_sel.groupBy(key_bucket_expr(keys, n_buckets).alias("__bucket"))
+        .agg(*stats_aggs("__op", "__seq", delete_op))
+        .collect()
+    )
+
+
+def _bucket_window_winners(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
+    """Each key's last row by (seq, pri), found by a window over the placed
+    buckets: one exchange (``place_buckets``), then a per-task sort. The
+    output stays bucket-placed and sorted by bucket, so the write needs
+    neither a second exchange nor a second sort.
+
+    Null-safe group-end detection: lead(lit(1)) is NULL only at the
+    partition's last row (lead(key).isNull() would also fire mid-stream
+    when the NEXT key is genuinely NULL), and eqNullSafe treats NULL keys
+    as a real group — lead(k) != k evaluates to NULL for them, silently
+    keeping/dropping whole NULL-key groups."""
+    placed = place_buckets(
+        df.withColumn("__bucket", key_bucket_expr(keys, n_buckets)), n_buckets
+    )
+    w = Window.partitionBy("__bucket", "__part").orderBy(
+        *[F.col(k) for k in keys], F.col("__seq"), F.col("__pri")
+    )
+    last = F.lead(F.lit(1)).over(w).isNull()
+    for k in keys:
+        last = last | ~F.lead(F.col(k)).over(w).eqNullSafe(F.col(k))
+    return placed.withColumn("__last", last).where(F.col("__last"))
 
 
 def _cdf_changes(
@@ -112,6 +189,13 @@ def _cdf_changes(
     )
 
 
+def _observed(observation: Observation) -> BatchStats:
+    """The counts an Observation carried on the merge's own job (buckets
+    are not observed: the strategies that use this replace every bucket)."""
+    got = observation.get
+    return BatchStats([], int(got["n"] or 0), int(got["deletes"] or 0), got["max_seq"])
+
+
 def merge_patch(
     table: LakeTable,
     batch_df: DataFrame,
@@ -120,6 +204,7 @@ def merge_patch(
     seq_col: str = "seq",
     summary_update: dict | None = None,
     publish: bool = True,
+    batch_stats: BatchStats | None = None,
 ) -> dict:
     """Apply one change batch under PARTIAL-UPDATE semantics (the
     ``cdc/patch.py`` merge engine, wired to the lake): a ``U`` payload's
@@ -138,10 +223,10 @@ def merge_patch(
     (``cdc.patch.patch_fold``) folds merge + in-batch patch resolution,
     then the bucket repartition for the write — scan, one key shuffle, one
     bucket shuffle. Steady-state batches prune to touched buckets exactly
-    like ``merge_upsert`` (same narrow stats pre-pass, same
-    ``PRUNE_THRESHOLD``). Idempotent via commit manifests; exactly-once
-    replay composes because ``patch_merge``'s base-as-insert algebra IS
-    this union (tests prove resume == one-shot).
+    like ``merge_upsert`` (same ``batch_stats``, same ``PRUNE_THRESHOLD``).
+    Idempotent via commit manifests; exactly-once replay composes because
+    ``patch_merge``'s base-as-insert algebra IS this union (tests prove
+    resume == one-shot).
 
     Seq-guard/tombstone semantics come FREE from the algebra: a tombstone
     re-enters as a ``D`` row image at its stored ``_seq``, so it shadows
@@ -192,29 +277,11 @@ def merge_patch(
 
     table_rows = int(snap.summary.get("row_count", 0) or 0)
 
-    # Narrow stats pre-pass (keys/op/seq only — Catalyst prunes the scan):
-    # touched buckets + event counts in one tiny aggregate, same shape the
-    # upsert merge uses for its pruned strategy.
-    bucket_stats = (
-        batch_sel.groupBy(
-            key_bucket_expr(keys, snap.n_buckets).alias("__bucket")
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.when(F.col("__op") == delete_op, 1).otherwise(0)
-            ).alias("dels"),
-            F.max("__seq").alias("max_seq"),
-        )
-        .collect()
-    )
-    n_total = sum(int(r["n"]) for r in bucket_stats)
-    n_dels = sum(int(r["dels"] or 0) for r in bucket_stats)
-    max_seq = max(
-        (s for s in (r["max_seq"] for r in bucket_stats) if s is not None),
-        default=None,
-    )
-    touched = sorted(r["__bucket"] for r in bucket_stats)
+    if batch_stats is None:
+        batch_stats = collect_batch_stats(batch_sel, keys, snap.n_buckets, delete_op)
+    n_total, n_dels = batch_stats.n, batch_stats.deletes
+    max_seq = batch_stats.max_seq
+    touched = batch_stats.buckets
     use_pruning = table_rows > 0 and n_total < PRUNE_THRESHOLD * table_rows
 
     if not touched:
@@ -312,9 +379,9 @@ def merge_upsert(
     two_phase_dedup: bool = False,
     summary_update: dict | None = None,
     batch_size_hint: int | None = None,
-    force_stats_pass: bool = False,
     publish: bool = True,
     branch: str | None = None,
+    batch_stats: BatchStats | None = None,
 ) -> dict:
     """Apply one change batch. Returns merge stats. Idempotent: a commit_id
     already present in the snapshot history is skipped outright.
@@ -323,13 +390,17 @@ def merge_upsert(
     header + manifests are written but VERSION never moves and no commit
     marker lands — audit via ``read(snapshot_id=...)``, then
     ``table.publish_snapshot`` / ``table.discard_snapshot``.
-    ``batch_size_hint``: approximate event count (e.g. the seq-range width) —
-    picks pruned vs single-pass without counting the batch.
-    ``force_stats_pass``: always run the explicit stats pre-pass (required
-    inside streaming foreachBatch, where Observation metrics never fire).
-    ``branch``: merge onto that branch's head (reads the BRANCH state, not
-    main) and stage the result as a branch-owned snapshot — the audit-branch
-    workflow; ``table.fast_forward`` publishes the chain."""
+    ``batch_stats``: the batch's touched buckets and counts, computed by
+    the caller's pre-pass (``cdc.apply.batch_prepass``); its true event
+    count picks the strategy and the merge runs no stats pass of its own.
+    Without it, ``batch_size_hint`` (approximate event count, e.g. the
+    seq-range width) picks pruned vs single-pass, the pruned strategy runs
+    one narrow bucket aggregate, and the others count the batch with a
+    ``pyspark.sql.Observation`` on the merge's own job (Observation metrics
+    never fire inside a streaming ``foreachBatch``, so that path passes
+    stats). ``branch``: merge onto that branch's head (reads the BRANCH
+    state, not main) and stage the result as a branch-owned snapshot — the
+    audit-branch workflow; ``table.fast_forward`` publishes the chain."""
     if table.has_commit(commit_id) or (
         branch is not None and table._branch_has_commit(branch, commit_id)
     ):
@@ -416,34 +487,26 @@ def merge_upsert(
     # Seq-guarded/tombstone tables qualify too when EMPTY: with no current
     # rows the guard reduces to in-batch max-seq-wins, and delete winners
     # become tombstone rows instead of being dropped — so the streaming
-    # path's initial backfill (force_stats_pass, empty table) also takes
-    # this path, with an explicit narrow stats pre-pass standing in for the
-    # Observation (which never fires inside foreachBatch).
+    # path's initial backfill (empty table) also takes this path.
     # The broadcast build side is one winning seq per distinct key — at an
     # initial load of HUNDREDS of millions of keys that exceeds Spark's
     # broadcast limits (512M rows / 8 GB) and the driver's memory, so very
     # large hinted batches fall back to the single-pass shuffle (or,
     # better, the bucketed zero-broadcast layout in cdc/bucketed.py).
+    n_batch = batch_size_hint if batch_stats is None else batch_stats.n
     max_events = int(os.environ.get("SPARK_GRAFT_LATE_MAT_MAX_EVENTS", 100_000_000))
     late_mat = (
         os.environ.get("SPARK_GRAFT_LATE_MAT", "1") != "0"  # bench A/B lever
         and table_rows == 0
         and not two_phase_dedup
-        and (batch_size_hint is None or batch_size_hint <= max_events)
+        and (n_batch is None or n_batch <= max_events)
     )
+    observation = None
     if late_mat:
-        t_obs = None
         narrow = batch_sel.select(*keys, "__seq", "__op")
-        stats_aggs = [
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("__op") == delete_op, 1).otherwise(0)).alias("dels"),
-            F.max("__seq").alias("max_seq"),
-        ]
-        if force_stats_pass:
-            got = narrow.agg(*stats_aggs).collect()[0]
-        else:
-            t_obs = Observation(f"merge-lm-{commit_id}")
-            narrow = narrow.observe(t_obs, *stats_aggs)
+        if batch_stats is None:
+            observation = Observation(f"merge-lm-{commit_id}")
+            narrow = narrow.observe(observation, *stats_aggs("__op", "__seq", delete_op))
         # NO distinct on the build side: two keys sharing a winning seq value
         # put two wseq=s rows in the build relation, so probe rows with that
         # seq match twice — but the duplicates are IDENTICAL rows and the
@@ -456,19 +519,7 @@ def merge_upsert(
         fetched = batch_sel.join(
             F.broadcast(win_seqs), batch_sel["__seq"] == F.col("__wseq"), "inner"
         ).drop("__wseq")
-
-        from pyspark.sql.window import Window
-
-        bucketed = fetched.withColumn(
-            "__bucket", key_bucket_expr(keys, snap.n_buckets)
-        ).repartition(snap.n_buckets, F.col("__bucket"))
-        w = Window.partitionBy("__bucket").orderBy(
-            *[F.col(k) for k in keys], F.col("__seq"), F.col("__pri")
-        )
-        last = F.lead(F.lit(1)).over(w).isNull()
-        for k in keys:
-            last = last | ~F.lead(F.col(k)).over(w).eqNullSafe(F.col(k))
-        winners = bucketed.withColumn("__last", last).where(F.col("__last"))
+        winners = _bucket_window_winners(fetched, keys, snap.n_buckets)
         lm_cols = list(keys) + value_cols
         if seq_guard:
             winners = winners.withColumn("_seq", F.col("__seq"))
@@ -482,15 +533,13 @@ def merge_upsert(
         new_files = table.write_data_files(
             merged, snapshot_hint=f"{snap.snapshot_id + 1:08d}", repartition=False
         )
-        if t_obs is not None:
-            got = t_obs.get
-        n_total = int(got["n"] or 0)
-        n_dels = int(got["dels"] or 0)
+        if observation is not None:
+            batch_stats = _observed(observation)
         affected = sorted(set(new_files) | {int(b) for b in snap.files})
         for b in affected:
             new_files.setdefault(b, [])
         su = dict(summary_update or {})
-        su.setdefault("max_seq", got["max_seq"])
+        su.setdefault("max_seq", batch_stats.max_seq)
         table.commit_files(
             commit_id, affected, new_files, su,
             base_snapshot_id=snap.snapshot_id, publish=publish, branch=branch,
@@ -499,65 +548,23 @@ def merge_upsert(
             "skipped": False,
             "commit_id": commit_id,
             "affected_buckets": len(affected),
-            "upserts": n_total - n_dels,
-            "deletes": n_dels,
+            "upserts": batch_stats.n - batch_stats.deletes,
+            "deletes": batch_stats.deletes,
             "strategy": "late-materialization",
-            "max_seq": got["max_seq"],
+            "max_seq": batch_stats.max_seq,
             "seconds": time.time() - t0,
         }
 
-    # Stats and strategy are DECOUPLED (round 4): force_stats_pass (inside
-    # streaming foreachBatch, where Observation metrics never fire) forces
-    # an explicit narrow stats pre-pass — NOT the pruned strategy. The old
-    # coupling forced the two-shuffle aggregate path onto backlog-sized
-    # triggers where the one-shuffle window merge is right (measured +2.4s
-    # on a 1M-event incremental trigger). The pre-pass itself costs ~0.3s:
-    # Catalyst prunes its scan to (keys, seq, op) only. A bonus: the TRUE
-    # batch size from the pass now picks the strategy — streaming triggers
-    # carry no batch_size_hint, so they previously could never prune.
-    stats_rows = None
-    if force_stats_pass:
-        stats_rows = (
-            batch_sel.groupBy(
-                key_bucket_expr(keys, snap.n_buckets).alias("__bucket")
-            )
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.when(F.col("__op") == delete_op, 1).otherwise(0)).alias(
-                    "dels"
-                ),
-                F.max("__seq").alias("max_seq"),
-            )
-            .collect()
-        )
-        n_batch = sum(int(r["n"]) for r in stats_rows)
-        use_pruning = table_rows > 0 and n_batch < PRUNE_THRESHOLD * table_rows
-    else:
-        use_pruning = (
-            table_rows > 0
-            and batch_size_hint is not None
-            and batch_size_hint < PRUNE_THRESHOLD * table_rows
-        )
-
-    observation = None
+    # The batch's true size (from batch_stats) or the caller's hint picks
+    # the strategy; a streaming trigger carries no hint, so its stats are
+    # what lets it prune.
+    use_pruning = (
+        table_rows > 0 and n_batch is not None and n_batch < PRUNE_THRESHOLD * table_rows
+    )
     if use_pruning:
-        # pre-pass: touched buckets + batch stats in one tiny aggregate
-        bucket_stats = stats_rows if stats_rows is not None else (
-            batch_sel.groupBy(key_bucket_expr(keys, snap.n_buckets).alias("__bucket"))
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.when(F.col("__op") == delete_op, 1).otherwise(0)).alias("dels"),
-                F.max("__seq").alias("max_seq"),
-            )
-            .collect()
-        )
-        affected = sorted(r["__bucket"] for r in bucket_stats)
-        n_total = sum(int(r["n"]) for r in bucket_stats)
-        n_dels = sum(int(r["dels"] or 0) for r in bucket_stats)
-        max_seq = max(
-            (s for s in (r["max_seq"] for r in bucket_stats) if s is not None),
-            default=None,
-        )  # a bucket whose events all have null seq yields max_seq=None
+        if batch_stats is None:
+            batch_stats = collect_batch_stats(batch_sel, keys, snap.n_buckets, delete_op)
+        affected = batch_stats.buckets
         if not affected:
             su0 = dict(summary_update or {})
             if cdf_on:  # captured-and-empty: readers skip, never diff
@@ -577,22 +584,10 @@ def merge_upsert(
             buckets=affected,
         )
     else:
-        if stats_rows is not None:
-            # explicit stats already collected: single-pass strategy with no
-            # Observation (which would never fire inside foreachBatch)
-            n_total = sum(int(r["n"]) for r in stats_rows)
-            n_dels = sum(int(r["dels"] or 0) for r in stats_rows)
-            max_seq = max(
-                (s for s in (r["max_seq"] for r in stats_rows) if s is not None),
-                default=None,
-            )
-        else:
+        if batch_stats is None:
             observation = Observation(f"merge-{commit_id}")
             batch_sel = batch_sel.observe(
-                observation,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("__op") == delete_op, 1).otherwise(0)).alias("dels"),
-                F.max("__seq").alias("max_seq"),
+                observation, *stats_aggs("__op", "__seq", delete_op)
             )
         affected = None  # every bucket is replaced
         current = table.read(
@@ -652,7 +647,7 @@ def merge_upsert(
         write_repartition = True
     else:
         # single-pass/backfill: ONE wide shuffle total. The bucket is a pure
-        # function of the keys, so repartitioning by __bucket co-locates every
+        # function of the keys, so placing rows by bucket co-locates every
         # key's rows; a bucket-partitioned window then takes the max-payload
         # row per key with NO further exchange (the window's required
         # clustering is already satisfied), and the output is bucket-aligned
@@ -664,23 +659,7 @@ def merge_upsert(
         # an exact duplicate delivery (seq unique per key), and content-bearing
         # payload structs as sort keys measured 2x slower; scalar per-key
         # leads likewise beat a struct lead
-        from pyspark.sql.window import Window
-
-        bucketed = both.withColumn(
-            "__bucket", key_bucket_expr(keys, snap.n_buckets)
-        ).repartition(snap.n_buckets, F.col("__bucket"))
-        w = Window.partitionBy("__bucket").orderBy(
-            *[F.col(k) for k in keys], F.col("__seq"), F.col("__pri")
-        )
-        # null-safe group-end detection: lead(lit(1)) is NULL only at the
-        # partition's last row (lead(key).isNull() would also fire mid-stream
-        # when the NEXT key is genuinely NULL), and eqNullSafe treats NULL
-        # keys as a real group — lead(k) != k evaluates to NULL for them,
-        # silently keeping/dropping whole NULL-key groups
-        last = F.lead(F.lit(1)).over(w).isNull()
-        for k in keys:
-            last = last | ~F.lead(F.col(k)).over(w).eqNullSafe(F.col(k))
-        winners = bucketed.withColumn("__last", last).where(F.col("__last"))
+        winners = _bucket_window_winners(both, keys, snap.n_buckets)
         write_repartition = False
 
     out_cols = list(keys) + value_cols
@@ -717,10 +696,7 @@ def merge_upsert(
         agged.unpersist()
 
     if observation is not None:
-        got = observation.get
-        n_total = int(got["n"] or 0)
-        n_dels = int(got["dels"] or 0)
-        max_seq = got["max_seq"]
+        batch_stats = _observed(observation)
     if affected is None:  # single-pass replaces every previously-filled bucket
         affected = sorted(set(new_files) | {int(b) for b in snap.files})
     # buckets that lost all rows still count as replaced (their old files go)
@@ -729,7 +705,7 @@ def merge_upsert(
 
     su = dict(summary_update or {})
     su.update(cdf_su)
-    su.setdefault("max_seq", max_seq)
+    su.setdefault("max_seq", batch_stats.max_seq)
     table.commit_files(
         commit_id, affected, new_files, su,
         base_snapshot_id=snap.snapshot_id, publish=publish, branch=branch,
@@ -738,10 +714,10 @@ def merge_upsert(
         "skipped": False,
         "commit_id": commit_id,
         "affected_buckets": len(affected),
-        "upserts": n_total - n_dels,
-        "deletes": n_dels,
+        "upserts": batch_stats.n - batch_stats.deletes,
+        "deletes": batch_stats.deletes,
         "strategy": ("pruned" if use_pruning
                      else "agg-cdf" if cdf_on else "single-pass"),
-        "max_seq": max_seq,
+        "max_seq": batch_stats.max_seq,
         "seconds": time.time() - t0,
     }

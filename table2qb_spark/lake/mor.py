@@ -31,7 +31,8 @@ Semantic deltas vs the COW merge (both documented, both tested):
   entry carries ``_below_seq = seq + 1`` so every copy at or below the
   delete's seq is masked, while a later re-insert (higher seq) survives.
 
-Scale/cost shape per batch: one narrow in-batch dedup aggregate; one
+Scale/cost shape per batch: the touched buckets from the caller's
+``batch_stats`` (or one narrow aggregate); one narrow in-batch dedup; one
 COLUMN-PRUNED read of the touched buckets' (keys, _seq) for the cross-batch
 seq guard (kilobytes per row read, vs the COW merge reading AND rewriting
 full payloads); one bucket-partitioned append write sized by the batch.
@@ -49,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.dedup import dedup_max_seq
+from table2qb_spark.lake.merge import BatchStats, collect_batch_stats
 from table2qb_spark.lake.table import LakeTable, key_bucket_expr
 
 
@@ -62,10 +64,13 @@ def merge_mor(
     summary_update: dict | None = None,
     publish: bool = True,
     branch: str | None = None,
+    batch_stats: BatchStats | None = None,
 ) -> dict:
     """Apply one change batch merge-on-read. Same idempotency (commit_id
-    skip), concurrency (base_snapshot_id), stats and ``branch`` contract as
-    ``merge_upsert``. Requires a seq-guarded table (``_seq`` column): the
+    skip), concurrency (base_snapshot_id), stats, ``branch`` and
+    ``batch_stats`` contract as ``merge_upsert`` (only the stats' touched
+    buckets are used: the counts reported are of the winners that pass the
+    seq guard). Requires a seq-guarded table (``_seq`` column): the
     read-time mask is versioned by sequence number."""
     if table.has_commit(commit_id) or (
         branch is not None and table._branch_has_commit(branch, commit_id)
@@ -95,19 +100,20 @@ def merge_mor(
     if missing:
         raise ValueError(f"Batch is missing columns {missing}")
 
+    # declared types, as in merge_upsert: the bucket of a key must not
+    # depend on the type the batch happened to carry it in
+    decl = {c["name"]: c["type"] for c in snap.current_schema()}
     batch_sel = batch_df.select(
-        *keys,
+        *[F.col(k).cast(decl[k]).alias(k) for k in keys],
         F.col(seq_col).cast("long").alias("__seq"),
         F.col(op_col).alias("__op"),
-        *[F.col(c) for c in value_cols],
+        *[F.col(c).cast(decl[c]).alias(c) for c in value_cols],
     )
+    if batch_stats is None:
+        batch_stats = collect_batch_stats(batch_sel, keys, snap.n_buckets, delete_op)
+    touched = batch_stats.buckets
     winners = dedup_max_seq(batch_sel, keys, seq_col="__seq").withColumn(
         "__bucket", key_bucket_expr(keys, snap.n_buckets)
-    )
-
-    # touched buckets: tiny distinct (bounded by n_buckets)
-    touched = sorted(
-        r["__bucket"] for r in winners.select("__bucket").distinct().collect()
     )
     if not touched:
         # empty batch still commits (exactly-once marker for the range)

@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from table2qb_spark.lake.hashing import key_bucket
+from table2qb_spark.lake.hashing import key_bucket, partition_salts
 
 META_DIR = "_meta"
 DATA_DIR = "data"
@@ -70,18 +70,39 @@ class ConcurrentCommitError(RuntimeError):
     commit attempt. The caller should re-read the table and retry the merge."""
 
 
-def key_bucket_expr(key_cols: list[str], n_buckets: int) -> Column:
+def key_bucket_expr(
+    key_cols: list[str], n_buckets: int, key_types: dict[str, str] | None = None
+) -> Column:
     """The bucket transform. MUST be stable across sessions/versions — it is
     part of the on-disk layout. xxhash64 over the key columns separated by a
     unit separator, mod n_buckets. ``lake/hashing.py::key_bucket`` is its
-    driver-side twin (point lookups); the two must change together."""
+    driver-side twin (point lookups); the two must change together.
+    ``key_types`` (name -> declared type) first casts each key to its
+    declared type, as the merge does before it buckets a batch."""
     sep = F.lit("\x1f")
     parts: list[Column] = []
     for i, k in enumerate(key_cols):
         if i:
             parts.append(sep)
-        parts.append(F.coalesce(F.col(k).cast("string"), F.lit("\x00")))
+        col = F.col(k) if key_types is None else F.col(k).cast(key_types[k])
+        parts.append(F.coalesce(col.cast("string"), F.lit("\x00")))
     return F.pmod(F.xxhash64(F.concat(*parts)), F.lit(n_buckets)).cast("int")
+
+
+def place_buckets(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Shuffle ``df`` (which carries ``__bucket``) so bucket ``b`` lands on
+    task ``b mod P``, ``P = min(n_buckets, defaultParallelism, 256)``: every
+    task gets its share of buckets, and one wave of tasks writes them all.
+    ``repartition(P, "__bucket")`` would hash the bucket ids instead and
+    crowd several buckets onto some tasks while others idle (8 buckets on
+    5 of 8 tasks, 3 in one). The rows carry the task's salt as ``__part``
+    (``hashing.partition_salts``), so a window over
+    ``partitionBy("__bucket", "__part")`` needs no second exchange; drop
+    ``__part`` before writing."""
+    p = max(1, min(n_buckets, df.sparkSession.sparkContext.defaultParallelism, 256))
+    salts = F.array(*[F.lit(s) for s in partition_salts(p)])
+    part = F.element_at(salts, F.col("__bucket") % p + 1)
+    return df.withColumn("__part", part).repartition(p, F.col("__part"))
 
 
 class _BucketFiles(Mapping):
@@ -1683,9 +1704,10 @@ class LakeTable:
         """Write a DataFrame that carries a ``__bucket`` column into new
         immutable parquet files under data/, partitioned by bucket. Returns
         {bucket: [file entries]} for ``commit_files``. With ``repartition``
-        the rows are shuffled so each bucket writes one file; pass False when
-        the input partitions already align 1:1 with buckets (bucketed
-        shuffle-free apply) — each task then writes its own directory.
+        the rows are shuffled so each bucket writes one file, bucket ``b`` on
+        task ``b mod P`` (``place_buckets``); pass False when the input is
+        already placed (the merge's bucket window) — each bucket then still
+        lives in exactly one task.
 
         ``sort_by`` clusters rows WITHIN each bucket (sortWithinPartitions —
         a per-task sort, no extra shuffle: the bucket exchange above already
@@ -1708,7 +1730,7 @@ class LakeTable:
             # n_partitions: the writer's target bucket count when it differs
             # from the snapshot's (bucket evolution — lake/rebucket.py)
             n = n_partitions if n_partitions is not None else snap.n_buckets
-            out = df.repartition(max(1, min(n, 256)), F.col("__bucket"))
+            out = place_buckets(df, n).drop("__part")
         if sort_by:
             # __bucket leads the sort keys: with n_buckets > partition count
             # several buckets share a task, and the partitionBy("b") writer
@@ -1798,10 +1820,9 @@ class LakeTable:
             self.path, DATA_DIR, f"snap-{snapshot_hint}-del-{uuid.uuid4().hex[:8]}"
         )
         snap = self.snapshot()
-        keyed = df.select(*snap.key_columns, "_below_seq", "__bucket")
-        keyed = keyed.repartition(
-            max(1, min(snap.n_buckets, 256)), F.col("__bucket")
-        )
+        keyed = place_buckets(
+            df.select(*snap.key_columns, "_below_seq", "__bucket"), snap.n_buckets
+        ).drop("__part")
         keyed.withColumnRenamed("__bucket", "b").write.mode("overwrite").partitionBy(
             "b"
         ).parquet(out_dir)
@@ -1843,10 +1864,9 @@ class LakeTable:
             self.path, DATA_DIR, f"snap-{snapshot_hint}-posdel-{uuid.uuid4().hex[:8]}"
         )
         snap = self.snapshot()
-        keyed = df.select("_file", "_pos", "__bucket")
-        keyed = keyed.repartition(
-            max(1, min(snap.n_buckets, 256)), F.col("__bucket")
-        )
+        keyed = place_buckets(
+            df.select("_file", "_pos", "__bucket"), snap.n_buckets
+        ).drop("__part")
         keyed.withColumnRenamed("__bucket", "b").write.mode("overwrite").partitionBy(
             "b"
         ).parquet(out_dir)

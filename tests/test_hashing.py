@@ -2,7 +2,9 @@
 bucket routing and bloom probe positions must agree bit for bit with the
 expressions that laid the data out, point lookups must find every key of
 every supported key type, and neither lookup planning nor bloom probing
-may launch a Spark job."""
+may launch a Spark job. The Murmur3 twin behind bucket placement must pick
+each task's salt exactly as Spark's ``hash`` partitioner does, so the
+merge's write keeps one exchange and bucket ``b`` lands on task ``b mod P``."""
 
 import datetime
 import random
@@ -12,8 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from table2qb_spark.lake.bloom import BloomProber, probe_positions
-from table2qb_spark.lake.hashing import hash_int, hash_value, key_bucket, xxh64
-from table2qb_spark.lake.table import LakeTable, key_bucket_expr
+from table2qb_spark.lake.hashing import hash_int, hash_value, key_bucket, murmur3_int, xxh64
+from table2qb_spark.lake.table import LakeTable, key_bucket_expr, place_buckets
 from tests.conftest import job_group
 
 N_BUCKETS = 17
@@ -194,3 +196,67 @@ def test_lookup_planning_and_bloom_probing_run_no_spark_job(spark, tmp_path):
         # the detector itself sees a job started in the group
         assert [r["payload"] for r in df.collect()] == ["p7"]
         assert jobs() != []
+
+
+def test_murmur3_int_matches_spark_hash(spark):
+    rng = random.Random(20261019)
+    values = [-(2**31), -(2**31) + 1, -1, 2**31 - 2, 2**31 - 1] + list(range(1024))
+    values += [rng.randint(-(2**31), 2**31 - 1) for _ in range(500)]
+    got = spark.createDataFrame([(v,) for v in values], "v int").select(
+        "v", F.hash("v").alias("h")
+    ).collect()
+    assert len(got) == len(values)
+    assert all(murmur3_int(r["v"]) == r["h"] for r in got)
+
+
+@pytest.mark.parametrize("n_buckets", [1, 3, 8, 256])
+def test_bucket_b_lands_on_task_b_mod_p(spark, n_buckets):
+    p = min(n_buckets, spark.sparkContext.defaultParallelism, 256)
+    df = spark.range(3 * n_buckets).select(
+        (F.col("id") % n_buckets).cast("int").alias("__bucket")
+    )
+    placed = place_buckets(df, n_buckets)
+    assert placed.rdd.getNumPartitions() == p
+    got = placed.select("__bucket", F.spark_partition_id().alias("task")).distinct().collect()
+    assert sorted(r["__bucket"] for r in got) == list(range(n_buckets))
+    assert all(r["task"] == r["__bucket"] % p for r in got)
+
+
+def test_merge_write_plan_has_one_exchange_and_one_sort(spark, tmp_path):
+    """The single-pass merge hands write_data_files a plan with ONE shuffle
+    (the bucket placement) and one sort (the bucket window's); the sort the
+    partitionBy("b") writer needs is already satisfied, so planning one adds
+    nothing."""
+    from table2qb_spark.lake import merge
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "plan"), [("repo", "string"), ("path", "string"),
+                                        ("content", "string")], ["repo", "path"], n_buckets=8,
+    )
+    ev = spark.range(200).select(
+        F.col("id").alias("seq"), F.lit("U").alias("op"),
+        (F.col("id") % 7).cast("string").alias("repo"),
+        F.col("id").cast("string").alias("path"), F.lit("x").alias("content"),
+    )
+    merge.merge_upsert(t, ev, "c1")
+    handed = []
+    write = LakeTable.write_data_files
+
+    def capture(self, df, *args, **kwargs):
+        handed.append(df)
+        return write(self, df, *args, **kwargs)
+
+    LakeTable.write_data_files = capture
+    try:
+        stats = merge.merge_upsert(t, ev.withColumn("seq", F.col("seq") + 1000), "c2")
+    finally:
+        LakeTable.write_data_files = write
+    assert stats["strategy"] == "single-pass"
+
+    def plan(df):
+        return df._jdf.queryExecution().simpleString()
+
+    (df,) = handed
+    assert plan(df).count("Exchange ") == 1
+    assert plan(df).count("Sort [") == 1
+    assert plan(df.sortWithinPartitions("__bucket")).count("Sort [") == 1

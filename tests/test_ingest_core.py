@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from table2qb_spark.cdc.apply import ChangeLogReplayer
+from table2qb_spark.cdc.apply import PHASES, ChangeLogReplayer
 from table2qb_spark.cdc.streaming import create_stream_table, run_stream_to_completion
 from table2qb_spark.lake.table import LakeTable
 
@@ -74,7 +74,8 @@ def test_replay_events_per_sec_counts_applied_events(spark, tmp_path):
 def test_replay_stream_and_bucketed_write_one_metrics_schema(spark, tmp_path):
     """One log with malformed events, ingested by the replayer and by the
     stream, each with a DLQ: same live state, same quarantined total, and
-    every metrics row — the bucketed replayer's too — has one key set."""
+    every metrics row — the bucketed replayer's too — has one key set,
+    per-phase seconds included."""
     from table2qb_spark.cdc.bucketed import BucketedReplayer, write_bucketed_change_log
 
     rows = [
@@ -113,6 +114,13 @@ def test_replay_stream_and_bucketed_write_one_metrics_schema(spark, tmp_path):
     assert [m["max_seq"] for m in replay] == [4, 7]
     assert all(m["strategy"] for m in replay + stream)
     assert all(m["seq_start"] is None and m["lag_events"] is None for m in stream)
+    # per-phase seconds: null where the path skips the phase (the bucketed
+    # path times none; the replayer's one pre-pass sits on its first row)
+    assert set(PHASES) <= set(replay[0])
+    assert all(m[k] is None for m in bucketed for k in PHASES)
+    assert all(m[k] is not None for m in replay + stream for k in ("dlq_s", "reconcile_s", "merge_s"))
+    assert [m["prepass_s"] is not None for m in replay] == [True, False]
+    assert all(m["prepass_s"] is not None for m in stream)
 
 
 def test_tracer_sees_merge_and_reconcile_under_both_front_ends(spark, tmp_path):

@@ -645,10 +645,11 @@ class TestEventsFormats:
 
 
 def test_late_mat_on_empty_seq_guarded_tombstone_table(spark, tmp_path):
-    """The streaming path's initial backfill (empty table, force_stats_pass,
-    _seq guard + tombstones) takes late-materialization: winners carry their
+    """The streaming path's initial backfill (empty table, stats from the
+    ingest pre-pass, _seq guard + tombstones) takes late-materialization: winners carry their
     _seq, delete winners become tombstone rows, and a later lower-seq update
     cannot resurrect the key."""
+    from table2qb_spark.cdc.apply import batch_prepass
     from table2qb_spark.cdc.streaming import create_stream_table
 
     t = create_stream_table(
@@ -663,7 +664,7 @@ def test_late_mat_on_empty_seq_guarded_tombstone_table(spark, tmp_path):
             (6, "I", "r2", "b.py", "c", "py", "v6"),
         ],
     )
-    stats = merge_upsert(t, b, "s0", force_stats_pass=True)
+    stats = merge_upsert(t, b, "s0", batch_stats=batch_prepass(t.snapshot(), b)[0].stats)
     assert stats["strategy"] == "late-materialization"
     rows = {(r["repo"], r["path"]): r for r in t.read().collect()}
     assert rows[("r1", "a.py")]["content"] == "v5"
@@ -673,7 +674,7 @@ def test_late_mat_on_empty_seq_guarded_tombstone_table(spark, tmp_path):
     assert live == {("r1", "a.py")}
     # late lower-seq update arrives after the tombstone: key stays dead
     late = batch_df(spark, [(4, "U", "r2", "b.py", "c", "py", "zombie")])
-    merge_upsert(t, late, "s1", force_stats_pass=True)
+    merge_upsert(t, late, "s1", batch_stats=batch_prepass(t.snapshot(), late)[0].stats)
     assert {(r["repo"], r["path"]) for r in t.read_live().collect()} == {("r1", "a.py")}
 
 

@@ -238,7 +238,9 @@ def test_small_stream_trigger_takes_pruned_strategy(spark, tmp_path):
     """Round-4 decoupling of stats from strategy: a small trigger into a
     populated table must rewrite only its touched buckets — streaming
     triggers carry no batch_size_hint, so before the fix they could never
-    prune and every trigger rewrote the whole table."""
+    prune and every trigger rewrote the whole table. The trigger's stats
+    come from the ingest pre-pass, as in foreachBatch."""
+    from table2qb_spark.cdc.apply import batch_prepass
     from table2qb_spark.lake.merge import merge_upsert
 
     t = create_stream_table(spark, str(tmp_path / "lakeS"), BASE_SCHEMA, KEYS, n_buckets=16)
@@ -246,13 +248,13 @@ def test_small_stream_trigger_takes_pruned_strategy(spark, tmp_path):
     big = spark.createDataFrame(
         rows, "seq long, op string, repo string, path string, commit string, lang string, content string"
     )
-    merge_upsert(t, big, "b1", force_stats_pass=True)
+    merge_upsert(t, big, "b1", batch_stats=batch_prepass(t.snapshot(), big)[0].stats)
     # one-key update: far below the prune threshold
     small = spark.createDataFrame(
         [(1000, "U", "r1", "p1", "c", "py", "new")],
         "seq long, op string, repo string, path string, commit string, lang string, content string",
     )
-    stats = merge_upsert(t, small, "b2", force_stats_pass=True)
+    stats = merge_upsert(t, small, "b2", batch_stats=batch_prepass(t.snapshot(), small)[0].stats)
     assert stats["strategy"] == "pruned"
     assert stats["affected_buckets"] < 16
     got = {r["path"]: r["content"] for r in t.read_live().collect()}
