@@ -155,7 +155,7 @@ def batch_prepass(
         out[b] = BatchPrepass(
             sorted(found - {RENAME_KEY}),
             parse_renames(p for _, _, p in directives),
-            BatchStats.of(rows) if op_col is not None else None,
+            BatchStats.of(rows, snap.n_buckets) if op_col is not None else None,
         )
     return out
 

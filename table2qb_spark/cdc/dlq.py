@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from table2qb_spark.cdc.apply import malformed_reason_expr
+from table2qb_spark.cdc.apply import EMPTY_PREPASS, batch_prepass, malformed_reason_expr
 from table2qb_spark.lake.merge import merge_upsert
 from table2qb_spark.lake.table import LakeTable
 
@@ -123,7 +123,11 @@ def redrive(
         # an all-NULL payload column can arrive typed non-string (writer
         # inferred e.g. int32 for a typeless NULL); from_json needs string
         df = df.withColumn(payload_col, F.col(payload_col).cast("string"))
-    df = reconcile_and_flatten(table, df, commit_id, payload_col)
+    # schema discovery only: the merge below counts its own (re-sequenced) batch
+    pre = batch_prepass(snap, df, payload_col, op_col=None).get(0, EMPTY_PREPASS)
+    df = reconcile_and_flatten(
+        table, df, commit_id, payload_col, pre.payload_keys, pre.renames
+    )
     # null-fill any remaining gap (a column added by DDL, not by payload);
     # re-read the schema — reconcile above may have just evolved it
     for c in table.snapshot().current_schema():

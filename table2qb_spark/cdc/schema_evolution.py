@@ -45,24 +45,16 @@ def reconcile_and_flatten(
     table: LakeTable,
     batch_df: DataFrame,
     batch_commit_id: str,
-    payload_col: str = "payload_json",
-    payload_keys: list[str] | None = None,
-    renames: dict[str, str] | None = None,
+    payload_col: str,
+    payload_keys: list[str],
+    renames: dict[str, str],
 ) -> DataFrame:
     """Evolve the table schema to cover this batch's payload, then return the
     batch with payload keys as real columns (string-typed; absent -> null).
-    ``payload_keys`` / ``renames`` are the batch's pre-pass results; a caller
-    without them (the DLQ re-drive) gets them from one
-    ``batch_prepass`` over ``batch_df``."""
+    ``payload_keys`` / ``renames`` are the batch's pre-pass results
+    (``cdc.apply.batch_prepass``)."""
     if payload_col not in batch_df.columns:
         return batch_df
-    if payload_keys is None or renames is None:
-        from table2qb_spark.cdc.apply import EMPTY_PREPASS, batch_prepass
-
-        pre = batch_prepass(
-            table.snapshot(), batch_df, payload_col, op_col=None
-        ).get(0, EMPTY_PREPASS)
-        payload_keys, renames = pre.payload_keys, pre.renames
     if renames:
         table.evolve_schema(rename_columns=renames, commit_id=f"{batch_commit_id}-rename")
 

@@ -40,7 +40,9 @@ the caller as ``batch_stats``: the ingest core (``cdc.apply``) computes them
 in its one pre-pass per batch, alongside schema discovery. A direct caller
 that passes none gets them from a ``pyspark.sql.Observation`` riding on the
 merge's own job, or, where the strategy needs the buckets before the merge
-(pruned, patch, merge-on-read), from one narrow aggregate.
+(pruned, patch, merge-on-read), from one narrow aggregate. Stats whose
+bucket count is not the merge snapshot's (a ``rebucket`` landed after the
+pre-pass) are recomputed the same way (``bucket_stats``).
 
 Bucket placement: rows reach the write through ``table.place_buckets``, so
 bucket ``b`` sits on task ``b mod P`` and the bucket window runs inside that
@@ -76,16 +78,18 @@ PRUNE_THRESHOLD = 0.2
 @dataclass(frozen=True)
 class BatchStats:
     """What a merge needs to know about its batch before it runs: the
-    buckets the batch touches (sorted), its event and delete counts, and its
-    max seq (None when no event has one)."""
+    buckets the batch touches (sorted) under a table of ``n_buckets``
+    buckets, its event and delete counts, and its max seq (None when no
+    event has one)."""
 
     buckets: list[int]
     n: int
     deletes: int
     max_seq: int | None
+    n_buckets: int | None = None
 
     @classmethod
-    def of(cls, rows) -> "BatchStats":
+    def of(cls, rows, n_buckets: int) -> "BatchStats":
         """Sum per-bucket rows carrying ``__bucket`` and ``stats_aggs``."""
         seqs = [r["max_seq"] for r in rows if r["max_seq"] is not None]
         return cls(
@@ -93,6 +97,7 @@ class BatchStats:
             sum(int(r["n"]) for r in rows),
             sum(int(r["deletes"] or 0) for r in rows),
             max(seqs, default=None),
+            n_buckets,
         )
 
 
@@ -113,8 +118,25 @@ def collect_batch_stats(
     return BatchStats.of(
         batch_sel.groupBy(key_bucket_expr(keys, n_buckets).alias("__bucket"))
         .agg(*stats_aggs("__op", "__seq", delete_op))
-        .collect()
+        .collect(),
+        n_buckets,
     )
+
+
+def bucket_stats(
+    batch_stats: BatchStats | None, batch_sel: DataFrame, keys: list[str],
+    n_buckets: int, delete_op: str = "D",
+) -> BatchStats:
+    """``batch_stats`` when its buckets hold for a table of ``n_buckets``
+    buckets (an empty batch touches none under any count), else one
+    ``collect_batch_stats`` aggregate. The caller's pre-pass may predate a
+    ``rebucket`` commit: its bucket ids then name the old layout, and a
+    merge that read them and replaced the new buckets would drop rows."""
+    if batch_stats is not None and (
+        batch_stats.n == 0 or batch_stats.n_buckets == n_buckets
+    ):
+        return batch_stats
+    return collect_batch_stats(batch_sel, keys, n_buckets, delete_op)
 
 
 def _bucket_window_winners(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
@@ -277,8 +299,7 @@ def merge_patch(
 
     table_rows = int(snap.summary.get("row_count", 0) or 0)
 
-    if batch_stats is None:
-        batch_stats = collect_batch_stats(batch_sel, keys, snap.n_buckets, delete_op)
+    batch_stats = bucket_stats(batch_stats, batch_sel, keys, snap.n_buckets, delete_op)
     n_total, n_dels = batch_stats.n, batch_stats.deletes
     max_seq = batch_stats.max_seq
     touched = batch_stats.buckets
@@ -562,8 +583,7 @@ def merge_upsert(
         table_rows > 0 and n_batch is not None and n_batch < PRUNE_THRESHOLD * table_rows
     )
     if use_pruning:
-        if batch_stats is None:
-            batch_stats = collect_batch_stats(batch_sel, keys, snap.n_buckets, delete_op)
+        batch_stats = bucket_stats(batch_stats, batch_sel, keys, snap.n_buckets, delete_op)
         affected = batch_stats.buckets
         if not affected:
             su0 = dict(summary_update or {})

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.dedup import dedup_max_seq
-from table2qb_spark.lake.merge import BatchStats, collect_batch_stats
+from table2qb_spark.lake.merge import BatchStats, bucket_stats
 from table2qb_spark.lake.table import LakeTable, key_bucket_expr
 
 
@@ -100,18 +100,16 @@ def merge_mor(
     if missing:
         raise ValueError(f"Batch is missing columns {missing}")
 
-    # declared types, as in merge_upsert: the bucket of a key must not
-    # depend on the type the batch happened to carry it in
+    # keys at their declared types, as in merge_upsert: the bucket of a key
+    # must not depend on the type the batch happened to carry it in
     decl = {c["name"]: c["type"] for c in snap.current_schema()}
     batch_sel = batch_df.select(
         *[F.col(k).cast(decl[k]).alias(k) for k in keys],
         F.col(seq_col).cast("long").alias("__seq"),
         F.col(op_col).alias("__op"),
-        *[F.col(c).cast(decl[c]).alias(c) for c in value_cols],
+        *[F.col(c) for c in value_cols],
     )
-    if batch_stats is None:
-        batch_stats = collect_batch_stats(batch_sel, keys, snap.n_buckets, delete_op)
-    touched = batch_stats.buckets
+    touched = bucket_stats(batch_stats, batch_sel, keys, snap.n_buckets, delete_op).buckets
     winners = dedup_max_seq(batch_sel, keys, seq_col="__seq").withColumn(
         "__bucket", key_bucket_expr(keys, snap.n_buckets)
     )

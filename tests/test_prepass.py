@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from table2qb_spark.cdc import apply
 from table2qb_spark.cdc.apply import ChangeLogReplayer
 from table2qb_spark.cdc.streaming import create_stream_table, run_stream_to_completion, start_stream
+from table2qb_spark.lake.rebucket import rebucket
 from table2qb_spark.lake.table import LakeTable
 from tests.conftest import job_group
 
@@ -179,3 +180,60 @@ def test_stream_trigger_runs_one_prepass_before_its_merge(spark, tmp_path, monke
     assert set(groups) == {str(q.runId)}
     assert marks[0] == expected
     assert {c["name"] for c in t.snapshot().current_schema()} >= {"licence", "stars", "topic"}
+
+
+def rebucket_after_prepass(monkeypatch, prepass_owner, name, table, n_buckets):
+    """Wrap ``prepass_owner.name`` so a rebucket commit lands right after
+    each pre-pass, before the merge that uses its stats."""
+    inner = getattr(prepass_owner, name)
+
+    def wrapped(*args, **kwargs):
+        out = inner(*args, **kwargs)
+        rebucket(table, n_buckets)
+        return out
+
+    monkeypatch.setattr(prepass_owner, name, wrapped)
+
+
+def test_replay_merge_after_a_rebucket_keeps_every_row(spark, tmp_path, monkeypatch):
+    """A rebucket between the replayer's pre-pass and its pruned merge: the
+    pre-pass buckets name the old layout, so the merge must not trust them
+    (reading the old ids and replacing the new buckets would drop rows)."""
+    rows = [(i, "I", "r", f"p{i:03d}", f"v{i}") for i in range(100)]
+    rows += [(100 + i, "U", "r", f"p{i:03d}", f"w{i}") for i in range(0, 100, 25)]
+    log = str(tmp_path / "log")
+    spark.createDataFrame(rows, "seq long, op string, repo string, path string, content string") \
+        .coalesce(1).write.parquet(log)
+    t = LakeTable.create(spark, str(tmp_path / "lake"), SCHEMA, KEYS, n_buckets=4)
+    ChangeLogReplayer(spark, t, log, batch_events=100).run(max_batches=1)
+    rebucket_after_prepass(monkeypatch, ChangeLogReplayer, "prepass", t, 8)
+    r = ChangeLogReplayer(spark, t, log, batch_events=100)
+    (res,) = r.run()
+    assert res.stats["strategy"] == "pruned"
+    assert t.snapshot().n_buckets == 8
+    got = {(x["path"], x["content"]) for x in t.read().collect()}
+    want = {(f"p{i:03d}", f"w{i}" if i % 25 == 0 else f"v{i}") for i in range(100)}
+    assert got == want
+
+
+@pytest.mark.parametrize("engine", ["upsert", "patch", "mor"])
+def test_stream_merge_after_a_rebucket_keeps_every_row(spark, tmp_path, monkeypatch, engine):
+    """The same race on the stream's path, for each merge that prunes to the
+    pre-pass buckets: a rebucket lands between the trigger's pre-pass and
+    its merge."""
+    t = create_stream_table(spark, str(tmp_path / "lake"), SCHEMA, KEYS, n_buckets=4)
+    ddl = "seq long, op string, repo string, path string, content string"
+    base = spark.createDataFrame([(i, "I", "r", f"p{i:03d}", f"v{i}") for i in range(100)], ddl)
+    args = dict(source="stream", batch=0, summary_update={},
+                merge_engine="patch" if engine == "patch" else "upsert",
+                merge_on_read=engine == "mor")
+    apply.apply_change_batch(t, base, "c0", **args)
+    rebucket_after_prepass(monkeypatch, apply, "batch_prepass", t, 8)
+    upd = spark.createDataFrame(
+        [(100 + i, "U", "r", f"p{i:03d}", f"w{i}") for i in range(0, 100, 25)], ddl
+    )
+    apply.apply_change_batch(t, upd, "c1", **{**args, "batch": 1})
+    assert t.snapshot().n_buckets == 8
+    got = {(x["path"], x["content"]) for x in t.read_live().collect()}
+    want = {(f"p{i:03d}", f"w{i}" if i % 25 == 0 else f"v{i}") for i in range(100)}
+    assert got == want
