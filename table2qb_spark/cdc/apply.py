@@ -174,12 +174,12 @@ def append_metrics_row(
     phases: dict | None = None,
 ) -> dict:
     """Append one batch's row to ``_meta/metrics.jsonl`` and return it.
-    Every ingest path (``source`` = replay / stream / bucketed) writes this
-    key set; a value the path cannot know is null. ``strategy``, the event
-    counts and ``max_seq`` come from the merge's returned ``stats``, so a
-    staged (unpublished) commit reports its own values, not the parent
-    snapshot's. ``phases`` maps each of ``PHASES`` to its seconds; a phase
-    the path did not run for this batch is null."""
+    Both ingest paths (``source`` = replay | stream) write this key set; a
+    value the path cannot know is null. ``strategy``, the event counts and
+    ``max_seq`` come from the merge's returned ``stats``, so a staged
+    (unpublished) commit reports its own values, not the parent snapshot's.
+    ``phases`` maps each of ``PHASES`` to its seconds; a phase the path did
+    not run for this batch is null."""
     upserts, deletes = stats.get("upserts"), stats.get("deletes")
     n_events = None if upserts is None else int(upserts) + int(deletes or 0)
     row = {

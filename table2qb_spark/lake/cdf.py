@@ -4,17 +4,17 @@ cdc-subscribe, cdc-diff --envelope) read O(changed rows) instead of
 re-deriving changes from an O(touched-bucket bytes) snapshot diff — Delta
 Lake's Change Data Feed re-expressed over this lake format.
 
-Why this exists (measured, tools/ab_materialize.py): the bucket-pruned
-snapshot diff is the right FALLBACK, but its cost is the touched buckets
-read at BOTH snapshot versions — and uniformly scattered updates touch
-every bucket, so at any scale where the scan dominates, diff-based
-incremental refresh loses to a plain recompute. The merge, however,
-already holds every before/after image in the same hash aggregate that
-decides the winners: capturing the envelope there costs one small
-parquet write per commit (plus persisting the aggregate so the feed and
-the data files are derived from ONE computation), after which every
-consumer's delta read is change-sized forever. That is the 100 TB shape:
-ingest pays O(changes) once, consumers pay O(changes) each.
+Why this exists (measured, BENCH.md "IVM refresh vs recompute"): the
+bucket-pruned snapshot diff is the right FALLBACK, but its cost is the
+touched buckets read at BOTH snapshot versions — and uniformly scattered
+updates touch every bucket, so at any scale where the scan dominates,
+diff-based incremental refresh loses to a plain recompute. The merge,
+however, already holds every before/after image in the same hash
+aggregate that decides the winners: capturing the envelope there costs
+one small parquet write per commit (plus persisting the aggregate so the
+feed and the data files are derived from ONE computation), after which
+every consumer's delta read is change-sized forever. That is the 100 TB
+shape: ingest pays O(changes) once, consumers pay O(changes) each.
 
 Layout and atomicity:
 

@@ -15,8 +15,8 @@ classifies every key:
 
 Both sides of the join are bucket-aligned by construction (same bucket
 function), so on a cluster the join co-partitions cleanly; a zero-shuffle
-per-bucket variant (coalesce(1) zip per bucket, as in cdc/bucketed.py) is
-the next step if diff volume ever dominates.
+per-bucket variant (one coalesce(1) sorted zip per bucket) is the next step
+if diff volume ever dominates.
 """
 
 from __future__ import annotations

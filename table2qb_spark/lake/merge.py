@@ -59,7 +59,6 @@ own fit path (``ops/classifier.py``) only lifts coefficients, so it is immune.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -73,6 +72,10 @@ from table2qb_spark.lake.table import LakeTable, key_bucket_expr, place_buckets
 # Batches larger than this fraction of the table's rows are not pruned to
 # their touched buckets (they would touch ~every bucket anyway).
 PRUNE_THRESHOLD = 0.2
+
+# Hinted batches above this many events skip late-materialization: its
+# broadcast build side holds one winning seq per distinct key.
+LATE_MAT_MAX_EVENTS = 100_000_000
 
 
 @dataclass(frozen=True)
@@ -511,16 +514,15 @@ def merge_upsert(
     # path's initial backfill (empty table) also takes this path.
     # The broadcast build side is one winning seq per distinct key — at an
     # initial load of HUNDREDS of millions of keys that exceeds Spark's
-    # broadcast limits (512M rows / 8 GB) and the driver's memory, so very
-    # large hinted batches fall back to the single-pass shuffle (or,
-    # better, the bucketed zero-broadcast layout in cdc/bucketed.py).
+    # broadcast limits (512M rows / 8 GB) and the driver's memory, so
+    # batches above LATE_MAT_MAX_EVENTS fall back to the single-pass
+    # shuffle. On 4 cores late-mat is the faster of the two (BENCH.md,
+    # "Late-materialization A/B").
     n_batch = batch_size_hint if batch_stats is None else batch_stats.n
-    max_events = int(os.environ.get("SPARK_GRAFT_LATE_MAT_MAX_EVENTS", 100_000_000))
     late_mat = (
-        os.environ.get("SPARK_GRAFT_LATE_MAT", "1") != "0"  # bench A/B lever
-        and table_rows == 0
+        table_rows == 0
         and not two_phase_dedup
-        and (n_batch is None or n_batch <= max_events)
+        and (n_batch is None or n_batch <= LATE_MAT_MAX_EVENTS)
     )
     observation = None
     if late_mat:

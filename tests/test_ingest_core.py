@@ -10,7 +10,9 @@ from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.apply import PHASES, ChangeLogReplayer
 from table2qb_spark.cdc.streaming import create_stream_table, run_stream_to_completion
-from table2qb_spark.lake.table import LakeTable
+from table2qb_spark.cdc.verify import table_sha256
+from table2qb_spark.datagen import changelog as gen
+from table2qb_spark.lake.table import LakeTable, key_bucket_expr
 
 SCHEMA = [
     ("repo", "string"),
@@ -71,13 +73,10 @@ def test_replay_events_per_sec_counts_applied_events(spark, tmp_path):
         assert abs(m["events_per_sec"] * m["seconds"] - m["batch_events"]) <= 0.05 * m["batch_events"]
 
 
-def test_replay_stream_and_bucketed_write_one_metrics_schema(spark, tmp_path):
+def test_replay_and_stream_write_one_metrics_schema(spark, tmp_path):
     """One log with malformed events, ingested by the replayer and by the
     stream, each with a DLQ: same live state, same quarantined total, and
-    every metrics row — the bucketed replayer's too — has one key set,
-    per-phase seconds included."""
-    from table2qb_spark.cdc.bucketed import BucketedReplayer, write_bucketed_change_log
-
+    every metrics row has one key set, per-phase seconds included."""
     rows = [
         (1, "I", "r1", "a.py", "c1", "py", "v1"),
         (2, "X", "r1", "b.py", "c2", "py", "v1"),     # bad op
@@ -101,26 +100,55 @@ def test_replay_stream_and_bucketed_write_one_metrics_schema(spark, tmp_path):
     assert {(r["repo"], r["path"]): r["content"] for r in rt.read().collect()} == expected
     assert {(r["repo"], r["path"]): r["content"] for r in st.read_live().collect()} == expected
 
-    bt = LakeTable.create(spark, str(tmp_path / "bucketed"), SCHEMA, KEYS, n_buckets=4)
-    valid = spark.createDataFrame([r for r in rows if r[1] != "X" and None not in r[:3]], EV_DDL)
-    write_bucketed_change_log(valid, str(tmp_path / "bev"), KEYS, 4)
-    BucketedReplayer(spark, bt, str(tmp_path / "bev"), batch_events=4).run()
-
-    replay, stream, bucketed = metrics_rows(rt), metrics_rows(st), metrics_rows(bt)
-    assert len(replay) == 2 and stream and len(bucketed) == 2
-    assert len({frozenset(m) for m in replay + stream + bucketed}) == 1
-    assert {m["source"] for m in replay + stream + bucketed} == {"replay", "stream", "bucketed"}
+    replay, stream = metrics_rows(rt), metrics_rows(st)
+    assert len(replay) == 2 and stream
+    assert len({frozenset(m) for m in replay + stream}) == 1
+    assert {m["source"] for m in replay + stream} == {"replay", "stream"}
     assert sum(m["dlq_events"] for m in replay) == sum(m["dlq_events"] for m in stream) == 3
     assert [m["max_seq"] for m in replay] == [4, 7]
     assert all(m["strategy"] for m in replay + stream)
     assert all(m["seq_start"] is None and m["lag_events"] is None for m in stream)
-    # per-phase seconds: null where the path skips the phase (the bucketed
-    # path times none; the replayer's one pre-pass sits on its first row)
+    # per-phase seconds: null where the path skips the phase (the
+    # replayer's one pre-pass sits on its first row)
     assert set(PHASES) <= set(replay[0])
-    assert all(m[k] is None for m in bucketed for k in PHASES)
     assert all(m[k] is not None for m in replay + stream for k in ("dlq_s", "reconcile_s", "merge_s"))
     assert [m["prepass_s"] is not None for m in replay] == [True, False]
     assert all(m["prepass_s"] is not None for m in stream)
+
+
+def test_replayer_replays_a_key_bucketed_log(spark, tmp_path):
+    """A log laid out by key bucket (``b=N/`` directories, the keyed-topic
+    layout) replays through the one ingest core to the flat log's table:
+    the seq range still comes from the parquet footers, found by walking
+    the bucket directories, and the ``b`` partition column stays out of
+    the table."""
+    n_buckets = 4
+    ev = gen.gen_change_log(
+        spark, 2500, 10, 40, seed=5, dup_rate=0.04, schema_evolution_after=None
+    )
+    flat = str(tmp_path / "flat")
+    gen.write_change_log(ev, flat, n_files=6)
+    bucketed = str(tmp_path / "bucketed")
+    spark.read.parquet(flat).withColumn("b", key_bucket_expr(KEYS, n_buckets)).write.partitionBy(
+        "b"
+    ).parquet(bucketed)
+    assert {d for d in os.listdir(bucketed) if d.startswith("b=")} == {
+        f"b={b}" for b in range(n_buckets)
+    }
+
+    cols = [c for c, _ in SCHEMA]
+    bounds, shas = {}, {}
+    for name, log in (("flat", flat), ("bucketed", bucketed)):
+        t = LakeTable.create(spark, str(tmp_path / f"lake_{name}"), SCHEMA, KEYS, n_buckets=n_buckets)
+        r = ChangeLogReplayer(spark, t, log, batch_events=800)
+        bounds[name] = r._footer_bounds()
+        assert bounds[name] is not None and r.seq_bounds() == bounds[name]
+        assert len(r.run()) > 1
+        assert [c["name"] for c in t.snapshot().current_schema()] == cols
+        assert t.read().columns == cols
+        shas[name] = table_sha256(t.read(), cols)
+    assert bounds["bucketed"] == bounds["flat"]
+    assert shas["bucketed"] == shas["flat"]
 
 
 def test_tracer_sees_merge_and_reconcile_under_both_front_ends(spark, tmp_path):

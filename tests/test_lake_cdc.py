@@ -11,6 +11,7 @@ from table2qb_spark.cdc.apply import ChangeLogReplayer
 from table2qb_spark.cdc.verify import table_sha256
 from table2qb_spark.datagen import changelog as gen
 from table2qb_spark.datagen.oracle import replay_oracle, table_sha256 as oracle_sha
+from table2qb_spark.lake import merge as merge_mod
 from table2qb_spark.lake.merge import merge_upsert
 from table2qb_spark.lake.table import LakeTable
 
@@ -605,12 +606,13 @@ class TestMergeStrategyEquivalence:
         assert s["strategy"] == "late-materialization"
         shas["late-mat"] = table_sha256(t.read(), cols)
 
-        monkeypatch.setenv("SPARK_GRAFT_LATE_MAT", "0")
+        # a batch over LATE_MAT_MAX_EVENTS takes the single-pass shuffle; the
+        # hint makes the gate see the batch size (an unsized batch passes it)
+        monkeypatch.setattr(merge_mod, "LATE_MAT_MAX_EVENTS", 0)
         t = LakeTable.create(spark, str(tmp_path / "sp"), BASE_SCHEMA, KEYS, n_buckets=4)
-        s = merge_upsert(t, batch_df(spark, events), "b")
+        s = merge_upsert(t, batch_df(spark, events), "b", batch_size_hint=len(events))
         assert s["strategy"] == "single-pass"
         shas["single-pass"] = table_sha256(t.read(), cols)
-        monkeypatch.delenv("SPARK_GRAFT_LATE_MAT")
 
         # split replay: batch 1 (late-mat, empty table) then batch 2 into the
         # non-empty table — forced down the PRUNED path via a tiny size hint
