@@ -56,6 +56,32 @@ def _leaf_column_index(md, name: str) -> int:
     return -1
 
 
+def _footer_schema(path: str):
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver
+    from one data file's footer, so no Spark job runs: Spark's own row
+    metadata when the file carries it (what Spark's reader prefers too),
+    else the Arrow schema. Partition columns (``op=I/`` directories) are not
+    in it: Spark still discovers them from the paths. None when ``path``
+    holds no parquet file."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    for root, dirs, files in os.walk(path):
+        # Spark skips "_" / "." entries (_SUCCESS, _temporary, .crc)
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for fn in sorted(files):
+            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                schema = pq.read_schema(os.path.join(root, fn))
+                spark_json = (schema.metadata or {}).get(
+                    b"org.apache.spark.sql.parquet.row.metadata"
+                )
+                if spark_json is not None:
+                    return StructType.fromJson(json.loads(spark_json))
+                return from_arrow_schema(schema)
+    return None
+
+
 def malformed_reason_expr(
     op_col: str,
     seq_col: str,
@@ -350,7 +376,11 @@ class ChangeLogReplayer:
             # parquet is the production layout; json/csv cover hand-rolled or
             # exported logs (csv needs header+inferSchema for seq as a number)
             if events_format == "parquet":
-                self.events = spark.read.parquet(events)
+                # the footer's schema, not Spark's inference: inference is
+                # a Spark job on every construction
+                schema = _footer_schema(events) if os.path.isdir(events) else None
+                reader = spark.read if schema is None else spark.read.schema(schema)
+                self.events = reader.parquet(events)
             elif events_format == "json":
                 self.events = spark.read.json(events)
             elif events_format == "csv":

@@ -8,18 +8,18 @@ insert/update/delete ops —
       WHEN MATCHED THEN UPDATE SET *
       WHEN NOT MATCHED AND batch.op != 'D' THEN INSERT *
 
-Physical design — **union-aggregate merge**: instead of (dedup-shuffle the
+Physical design — **union-window merge**: instead of (dedup-shuffle the
 batch) + (key-shuffle both join sides) + (bucket repartition), the current
 rows are unioned UNDER the batch at an always-losing sequence number
-(``-1``, or their stored ``_seq`` for seq-guarded tables) and one
-``groupBy(key).agg(max(struct(seq, op, ...)))`` picks the winner per key:
+(``-1``, or their stored ``_seq`` for seq-guarded tables), the union is
+placed by bucket in ONE exchange, and a window over each bucket keeps every
+key's last row by (seq, batch-beats-stored):
 
-    winner(key) = max over {current row @ seq=-1} ∪ {batch events @ seq}
+    winner(key) = last by seq over {current row @ seq=-1} ∪ {batch events @ seq}
 
-This folds in-batch dedup AND the merge join into ONE hash aggregate with
-map-side partial aggregation (hot keys combine locally before the exchange),
-so the whole merge is: scan -> one key-hash shuffle -> one bucket
-repartition -> write. Winners with op='D' are dropped (or tombstoned when
+This folds in-batch dedup AND the merge join into one bucket exchange whose
+output is already laid out for the write: scan -> one bucket shuffle ->
+per-task sort -> write. Winners with op='D' are dropped (or tombstoned when
 the table has a ``_deleted`` column).
 
 Strategies:
@@ -31,9 +31,16 @@ Strategies:
   batch size (the broadcast is key-set-sized).
 - **single-pass** (bursts/backfills into non-empty tables): everything in
   ONE Spark action.
-- **pruned** (steady-state CDC: batch small vs table): only the touched
-  buckets' files are read and rewritten (copy-on-write). At 100 TB this is
-  the default — batch cost scales with batch locality, not table size.
+- **pruned** (steady-state CDC: batch small vs table): the same bucket
+  window, over only the touched buckets' files, which it rewrites
+  (copy-on-write). At 100 TB this is the default — batch cost scales with
+  batch locality, not table size.
+- **agg-cdf** (tables with ``cdf.enabled``, unpruned): the one strategy
+  that still picks winners with a ``groupBy(key).agg(max(struct(...)))``
+  aggregate, because the change feed needs each key's before image beside
+  its winner; the aggregate is persisted, and the data write places its
+  winners by bucket. A pruned merge into a ``cdf.enabled`` table takes
+  this aggregate too and still reports ``pruned``.
 
 Batch stats (touched buckets, event and delete counts, max seq) come from
 the caller as ``batch_stats``: the ingest core (``cdc.apply``) computes them
@@ -241,13 +248,13 @@ def merge_patch(
     last-row-wins would null every untouched column. Ops are the engine
     vocabulary I/U/D (the patch algebra's boundary logic is defined on it).
 
-    Physical shape mirrors the upsert merge's union-aggregate design:
-    current rows union UNDER the batch as row images — live rows as ``I``,
-    tombstones as ``D``, at seq ``-1`` (their stored ``_seq`` on
-    seq-guarded tables) — then ONE map-side-combined ``groupBy(key)``
-    (``cdc.patch.patch_fold``) folds merge + in-batch patch resolution,
-    then the bucket repartition for the write — scan, one key shuffle, one
-    bucket shuffle. Steady-state batches prune to touched buckets exactly
+    Physical shape follows the upsert merge's union design, with an
+    aggregate in place of its bucket window: current rows union UNDER the
+    batch as row images — live rows as ``I``, tombstones as ``D``, at seq
+    ``-1`` (their stored ``_seq`` on seq-guarded tables) — then ONE
+    map-side-combined ``groupBy(key)`` (``cdc.patch.patch_fold``) folds
+    merge + in-batch patch resolution, then the bucket repartition for the
+    write — scan, one key shuffle, one bucket shuffle. Steady-state batches prune to touched buckets exactly
     like ``merge_upsert`` (same ``batch_stats``, same ``PRUNE_THRESHOLD``).
     Idempotent via commit manifests; exactly-once replay composes because
     ``patch_merge``'s base-as-insert algebra IS this union (tests prove
@@ -634,32 +641,25 @@ def merge_upsert(
         *[F.col(c) for c in value_cols],
     )
 
-    # The winner payload: __pri sits right after __seq in the ordering so an
-    # incoming event whose seq EQUALS the stored row's _seq deterministically
-    # wins (including deletes — 'D' would otherwise lose a lexicographic tie
-    # to 'U'), honouring "incoming wins when its seq >= the stored one".
-    payload = F.struct(
-        F.col("__seq"), F.col("__pri"), F.col("__op"), *[F.col(c) for c in value_cols]
-    )
+    # __pri orders right after __seq, so an incoming event whose seq EQUALS
+    # the stored row's _seq deterministically wins (including deletes — 'D'
+    # would otherwise lose a lexicographic tie to 'U'), honouring "incoming
+    # wins when its seq >= the stored one".
     both = current_sel.unionByName(batch_sel)
 
-    use_agg = use_pruning or cdf_on  # capture needs the aggregate's images
-    agged = None
-    if use_agg:
-        # pruned/steady-state: small dup-heavy batches benefit from map-side
-        # partial aggregation (ONE hash aggregate = in-batch dedup + merge
-        # decision), then a bucket repartition for the write. With CDF on,
-        # a second per-key struct keeps the CURRENT row's payload — the
-        # before image — and the aggregate is persisted so the feed write
-        # and the data write are two cheap reads of one computation.
-        agg_cols = [F.max(payload).alias("__p")]
-        if cdf_on:
-            agg_cols.append(
-                F.max(F.when(F.col("__pri") == 0, payload)).alias("__b")
-            )
-        agged = both.groupBy(*keys).agg(*agg_cols)
-        if cdf_on:
-            agged = agged.persist()
+    if cdf_on:
+        # CDF capture keeps the aggregate: next to the winner payload a
+        # second per-key struct keeps the CURRENT row's payload — the before
+        # image. The aggregate is persisted so the feed write and the data
+        # write are two cheap reads of one computation; the write then
+        # places the winners by bucket.
+        payload = F.struct(
+            F.col("__seq"), F.col("__pri"), F.col("__op"), *[F.col(c) for c in value_cols]
+        )
+        agged = both.groupBy(*keys).agg(
+            F.max(payload).alias("__p"),
+            F.max(F.when(F.col("__pri") == 0, payload)).alias("__b"),
+        ).persist()
         winners = agged.select(
             *keys,
             F.col("__p.__seq").alias("__seq"),
@@ -668,19 +668,17 @@ def merge_upsert(
         )
         write_repartition = True
     else:
-        # single-pass/backfill: ONE wide shuffle total. The bucket is a pure
-        # function of the keys, so placing rows by bucket co-locates every
-        # key's rows; a bucket-partitioned window then takes the max-payload
-        # row per key with NO further exchange (the window's required
-        # clustering is already satisfied), and the output is bucket-aligned
-        # so the write needs no second repartition either. vs the aggregate
-        # form this halves shuffled bytes — the scarce resource when 4N cores
-        # share one memory system — and skips the hash table (mostly-distinct
-        # keys make partial aggregation pure overhead on big batches).
-        # ordering stops at (__seq, __pri) — equal (key, seq) beyond __pri is
-        # an exact duplicate delivery (seq unique per key), and content-bearing
-        # payload structs as sort keys measured 2x slower; scalar per-key
-        # leads likewise beat a struct lead
+        # pruned, single-pass and backfill: ONE wide shuffle total. The
+        # bucket is a pure function of the keys, so placing rows by bucket
+        # co-locates every key's rows; a bucket-partitioned window then takes
+        # the last row per key by (__seq, __pri) with NO further exchange
+        # (the window's required clustering is already satisfied), and the
+        # output is bucket-aligned so the write needs no second repartition
+        # either. Against the aggregate form this halves shuffled bytes and
+        # skips the hash table. Ordering stops at (__seq, __pri) — equal
+        # (key, seq) beyond __pri is an exact duplicate delivery (seq unique
+        # per key), and content-bearing payload structs as sort keys measured
+        # 2x slower; scalar per-key leads likewise beat a struct lead
         winners = _bucket_window_winners(both, keys, snap.n_buckets)
         write_repartition = False
 
@@ -693,7 +691,7 @@ def merge_upsert(
         out_cols.append("_deleted")
     else:
         winners = winners.where(F.col("__op") != delete_op)
-    if use_agg:
+    if cdf_on:
         merged = winners.select(*out_cols).withColumn(
             "__bucket", key_bucket_expr(keys, snap.n_buckets)
         )

@@ -100,14 +100,16 @@ def merge_mor(
     if missing:
         raise ValueError(f"Batch is missing columns {missing}")
 
-    # keys at their declared types, as in merge_upsert: the bucket of a key
-    # must not depend on the type the batch happened to carry it in
+    # every column at its declared type, as in merge_upsert: the bucket of a
+    # key must not depend on the type the batch happened to carry it in, and
+    # a value written at the batch's type (bigint for a declared int) plants
+    # files that every later read rejects
     decl = {c["name"]: c["type"] for c in snap.current_schema()}
     batch_sel = batch_df.select(
         *[F.col(k).cast(decl[k]).alias(k) for k in keys],
         F.col(seq_col).cast("long").alias("__seq"),
         F.col(op_col).alias("__op"),
-        *[F.col(c) for c in value_cols],
+        *[F.col(c).cast(decl[c]).alias(c) for c in value_cols],
     )
     touched = bucket_stats(batch_stats, batch_sel, keys, snap.n_buckets, delete_op).buckets
     winners = dedup_max_seq(batch_sel, keys, seq_col="__seq").withColumn(

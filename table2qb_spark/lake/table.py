@@ -1267,6 +1267,15 @@ class LakeTable:
                     ", ".join(f"`{c['name']}` {c['type']}" for c in written)
                 )
             ).parquet(*abs_paths)
+            if not (with_bucket_col or with_pos_cols or pos_delete_paths) and [
+                (c["id"], c["name"], c["type"]) for c in written
+            ] == [(c["id"], c["name"], c["type"]) for c in current]:
+                # written under the current schema: the scan already has
+                # the current columns. Ids are compared too — a column
+                # dropped and re-added keeps name and type under a new id,
+                # and files written before must read null for it.
+                parts.append(df)
+                continue
             sel = []
             for c in current:
                 if c["id"] in w_by_id:

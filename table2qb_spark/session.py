@@ -61,6 +61,17 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # no per-call origin capture: with the default (true) PySpark wraps
+        # every functions.* / Column call to record its Python file:line for
+        # the "== DataFrame ==" part of error messages, at 4-5 extra py4j
+        # round trips, a Python stack walk and a failed `import IPython`
+        # per call. Measured on 4 cores at perfbench stream_tail size, one
+        # JVM with the arms interleaved: py4j round trips per point lookup
+        # 191 -> 51, per lake-cube build 968 -> 388, per stream trigger
+        # ~1,900 -> ~800; lookup median 0.086 -> 0.074 s, cube build
+        # 0.373 -> 0.297 s (BENCH.md). Pass it back on through extra_conf
+        # when debugging a query.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # task-side output commit (v2): v1's job commit renames every task's
         # output SERIALLY on the driver — a non-scaling term on

@@ -56,3 +56,24 @@ def job_group(spark):
         yield lambda: sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@contextmanager
+def py4j_round_trips():
+    """Yields a callable giving the number of py4j commands the Python
+    driver sent to the JVM inside the block (one per round trip)."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    sent = 0
+
+    def counting(self, command):
+        nonlocal sent
+        sent += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield lambda: sent
+    finally:
+        ClientServerConnection.send_command = send

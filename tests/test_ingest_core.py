@@ -6,6 +6,7 @@ import hashlib
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from table2qb_spark.cdc.apply import PHASES, ChangeLogReplayer
@@ -13,6 +14,7 @@ from table2qb_spark.cdc.streaming import create_stream_table, run_stream_to_comp
 from table2qb_spark.cdc.verify import table_sha256
 from table2qb_spark.datagen import changelog as gen
 from table2qb_spark.lake.table import LakeTable, key_bucket_expr
+from tests.conftest import job_group
 
 SCHEMA = [
     ("repo", "string"),
@@ -149,6 +151,30 @@ def test_replayer_replays_a_key_bucketed_log(spark, tmp_path):
         shas[name] = table_sha256(t.read(), cols)
     assert bounds["bucketed"] == bounds["flat"]
     assert shas["bucketed"] == shas["flat"]
+
+
+@pytest.mark.parametrize("partition_by", [None, "op"])
+def test_replayer_construction_runs_no_job(spark, tmp_path, partition_by):
+    """A parquet log's schema comes from one file's footer, read on the
+    driver: building a replayer launches no Spark job (schema inference
+    launched one), and the schema is the one inference gives, for a flat
+    log and for a log partitioned by op."""
+    ev = gen.gen_change_log(
+        spark, 600, 5, 20, seed=9, dup_rate=0.04, schema_evolution_after=None
+    )
+    log = str(tmp_path / "log")
+    writer = ev.coalesce(2).write
+    (writer.partitionBy(partition_by) if partition_by else writer).parquet(log)
+    t = LakeTable.create(spark, str(tmp_path / "lake"), SCHEMA, KEYS, n_buckets=4)
+    with job_group(spark) as jobs:
+        r = ChangeLogReplayer(spark, t, log, batch_events=250)
+        assert jobs() == []
+    assert r.events.schema == spark.read.parquet(log).schema
+    r.run()
+    cols = [c for c, _ in SCHEMA]
+    oracle = LakeTable.create(spark, str(tmp_path / "oracle"), SCHEMA, KEYS, n_buckets=4)
+    ChangeLogReplayer(spark, oracle, ev, batch_events=250).run()
+    assert table_sha256(t.read(), cols) == table_sha256(oracle.read(), cols)
 
 
 def test_tracer_sees_merge_and_reconcile_under_both_front_ends(spark, tmp_path):

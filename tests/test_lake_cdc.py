@@ -14,6 +14,7 @@ from table2qb_spark.datagen.oracle import replay_oracle, table_sha256 as oracle_
 from table2qb_spark.lake import merge as merge_mod
 from table2qb_spark.lake.merge import merge_upsert
 from table2qb_spark.lake.table import LakeTable
+from tests.conftest import job_group, py4j_round_trips
 
 BASE_SCHEMA = [
     ("repo", "string"),
@@ -692,6 +693,53 @@ def test_footer_bounds_with_struct_column_before_seq(spark, tmp_path):
     t = make_table(spark, tmp_path)
     r = ChangeLogReplayer(spark, t, path, batch_events=100)
     assert r._footer_bounds() == (50, 59)  # NOT meta.ts's (0, 9000)
+
+
+def test_pruned_upsert_runs_one_exchange(spark, tmp_path):
+    """A pruned upsert given its batch stats launches two Spark jobs: the
+    bucket exchange its window runs in, and the write, which needs no
+    second exchange. A winner aggregate followed by a bucket repartition
+    for the write launched three."""
+    from table2qb_spark.cdc.apply import batch_prepass
+
+    t = make_table(spark, tmp_path, n_buckets=4)
+    rows = [(i, "I", f"r{i % 5}", f"f{i}.py", "c", "py", f"v{i}") for i in range(1, 101)]
+    merge_upsert(t, batch_df(spark, rows), "b1")
+    b = batch_df(spark, [
+        (200, "U", "r1", "f1.py", "c", "py", "new"),
+        (150, "U", "r1", "f1.py", "c", "py", "older"),
+        (201, "D", "r2", "f2.py", None, None, None),
+        (202, "I", "r9", "g.py", "c", "go", "fresh"),
+    ])
+    stats = batch_prepass(t.snapshot(), b)[0].stats
+    with job_group(spark) as jobs:
+        s = merge_upsert(t, b, "b2", batch_stats=stats)
+        n_jobs = len(jobs())
+    assert s["strategy"] == "pruned" and s["affected_buckets"] == len(stats.buckets)
+    assert n_jobs == 2
+    state = {(r["repo"], r["path"]): r["content"] for r in t.read().collect()}
+    assert len(state) == 100
+    assert state[("r1", "f1.py")] == "new" and state[("r9", "g.py")] == "fresh"
+    assert ("r2", "f2.py") not in state and state[("r3", "f3.py")] == "v3"
+
+
+def test_point_lookup_round_trips_stay_under_ceiling(spark, tmp_path):
+    """A point lookup on a table written under one schema version builds
+    its DataFrame and collects in about 50 py4j round trips. Per-call origin capture
+    (PySpark's dataFrameDebugging, on by default) or a per-column
+    projection of files already at the current schema would each push it
+    past the ceiling."""
+    t = make_table(spark, tmp_path, n_buckets=4)
+    rows = [(i, "I", f"r{i % 5}", f"f{i}.py", "c", "py", f"v{i}") for i in range(1, 41)]
+    merge_upsert(t, batch_df(spark, rows), "b1")
+    key = {"repo": "r2", "path": "f7.py"}
+    t.lookup(key).collect()  # first use loads JVM classes the count should not see
+    with py4j_round_trips() as sent:
+        got = t.lookup(key).collect()
+        n = sent()
+    assert [r["content"] for r in got] == ["v7"]
+    # 51 today; 81 with the projection, 191 with origin capture
+    assert n <= 65, n
 
 
 class TestDistributedDigest:

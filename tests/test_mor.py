@@ -205,6 +205,22 @@ class TestMorSemantics:
         assert len(got) == 1 and got[0]["content"] == "back"
         assert t.row_count() == t.read().count()
 
+    def test_values_land_at_declared_types(self, spark, tmp_path):
+        """A batch carrying ``stars`` as bigint into a table that declares
+        int lands int files, as the COW merge writes them: files at the
+        batch's type fail every later read."""
+        t = create_stream_table(
+            spark, str(tmp_path / "t"),
+            [("repo", "string"), ("path", "string"), ("stars", "int")], KEYS, n_buckets=2,
+        )
+        b = spark.createDataFrame(
+            [(1, "I", "r", "a", 5), (2, "I", "r", "b", 7)],
+            "seq long, op string, repo string, path string, stars bigint",
+        )
+        merge_mor(t, b, "b0")
+        got = sorted((r["path"], r["stars"]) for r in t.read_live().collect())
+        assert got == [("a", 5), ("b", 7)]
+
     def test_requires_seq_guarded_table(self, spark, tmp_path):
         t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS, n_buckets=2)
         with pytest.raises(ValueError, match="seq-guarded"):

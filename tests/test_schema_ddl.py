@@ -90,6 +90,21 @@ class TestDropColumn:
         assert table.read().where(F.col("lang") == "go").count() == 50
         assert table.read().where(F.col("lang").isNull()).count() == N
 
+    def test_re_add_last_column_reads_null_in_old_files(self, spark, table):
+        """Dropping and re-adding the LAST column under its old name and
+        type gives a column list equal by name and type to the one the old
+        files were written under; only the column id differs, and the old
+        files must still read null for it."""
+        table.evolve_schema(drop_columns=["content"])
+        s = table.evolve_schema(add_columns=[("content", "string")])
+        assert [(c["name"], c["type"]) for c in s.current_schema()] == SCHEMA
+        got = table.read()
+        assert got.columns == [c for c, _ in SCHEMA]
+        assert got.count() == N
+        assert got.where(F.col("content").isNotNull()).count() == 0
+        _append(table, _rows(spark, start=N, n=50), "c2")
+        assert table.read().where(F.col("content").isNotNull()).count() == 50
+
     def test_drop_guards(self, table):
         with pytest.raises(ValueError, match="key column"):
             table.evolve_schema(drop_columns=["repo"])
