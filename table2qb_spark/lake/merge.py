@@ -666,7 +666,6 @@ def merge_upsert(
             F.col("__p.__op").alias("__op"),
             *[F.col(f"__p.{c}").alias(c) for c in value_cols],
         )
-        write_repartition = True
     else:
         # pruned, single-pass and backfill: ONE wide shuffle total. The
         # bucket is a pure function of the keys, so placing rows by bucket
@@ -680,7 +679,6 @@ def merge_upsert(
         # per key), and content-bearing payload structs as sort keys measured
         # 2x slower; scalar per-key leads likewise beat a struct lead
         winners = _bucket_window_winners(both, keys, snap.n_buckets)
-        write_repartition = False
 
     out_cols = list(keys) + value_cols
     if seq_guard:
@@ -710,7 +708,7 @@ def merge_upsert(
                   "cdf_sid": snap.snapshot_id + 1}
 
     new_files = table.write_data_files(
-        merged, snapshot_hint=f"{snap.snapshot_id + 1:08d}", repartition=write_repartition
+        merged, snapshot_hint=f"{snap.snapshot_id + 1:08d}", repartition=cdf_on
     )
     if cdf_on:
         agged.unpersist()
