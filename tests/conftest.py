@@ -1,5 +1,6 @@
 import os
 import sys
+import threading
 import uuid
 from contextlib import contextmanager
 
@@ -60,16 +61,20 @@ def job_group(spark):
 
 @contextmanager
 def py4j_round_trips():
-    """Yields a callable giving the number of py4j commands the Python
-    driver sent to the JVM inside the block (one per round trip)."""
+    """Yields a callable giving the number of py4j commands this thread
+    sent to the JVM inside the block (one per round trip). Other threads
+    are not counted: py4j's finalizer thread sends a delete for every
+    collected JVM-object proxy, whenever the collector runs."""
     from py4j.clientserver import ClientServerConnection
 
     send = ClientServerConnection.send_command
+    me = threading.get_ident()
     sent = 0
 
     def counting(self, command):
         nonlocal sent
-        sent += 1
+        if threading.get_ident() == me:
+            sent += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counting
